@@ -73,7 +73,7 @@ class PipelineConfig:
     similarity_threshold: float = 0.9
     # Candidate-pair generation: the reference has no cap at inference;
     # at 10^12-turn scale an O(n^2) blow-up on entity-rich conversations
-    # must be bounded. Capped pairs are counted in stage metrics.
+    # must be bounded. Capped pairs are dropped uncounted.
     max_pairs_per_conversation: int = 10_000
     # Entity pre-cap applied BEFORE the pair self-join so pairs past the cap
     # are never generated: the O(n²) intermediate is bounded at m(m-1)/2

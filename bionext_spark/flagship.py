@@ -14,19 +14,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from bionext_spark import synth
-from bionext_spark.adapters import StubEncoder, StubLexiconTagger
 from bionext_spark.config import DEFAULT_CONFIG
-from bionext_spark.operators.assemble import assemble_conversations
-from bionext_spark.operators.extraction import (
-    aggregate_triples,
-    classify_pair_spans,
-    estimate_pair_weights,
-)
-from bionext_spark.operators.linking import run_cleaner, run_linker
-from bionext_spark.operators.pairs import generate_pairs, pair_spans
-from bionext_spark.operators.tagging import run_tagger
-from bionext_spark.sources import fixtures
+from bionext_spark.pipeline import KGRun, checkpoint_cuts, run_chain
 
 _TURN_TEXT = {
     "click": "the patient took aspirin for diabetes today",
@@ -70,46 +59,18 @@ def derive_transcripts(spark: SparkSession, sf_dir: str, replicate: int = 1) -> 
 
 
 def run_kg_pipeline(spark: SparkSession, sf_dir: str, replicate: int = 1) -> DataFrame:
-    """events-derived transcripts → triples (full engine, stub adapters)."""
-    cfg = DEFAULT_CONFIG
-    transcripts = derive_transcripts(spark, sf_dir, replicate)
-    # Stage boundaries materialize with localCheckpoint: it both caches the
-    # rows AND truncates the logical plan. Without truncation the chained
-    # plan grows to hundreds of operators and Catalyst's per-query analysis
-    # dominates wall time (in pipeline.run the parquet stage tables provide
-    # the same cut durably).
-    # Arrow batch size for the kernel stages = the model batch size
-    # (reference uses 8/128 on GPU; CPU stubs take larger batches)
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(cfg.kernel_batch_size))
-    # salted two-phase assembly engages from config: conversations longer
-    # than skew_turns_threshold spread over many reducers in phase 1
-    # (north-rule skew handling; output proven identical in tests)
-    seg = cfg.skew_turns_threshold if cfg.salt_buckets > 0 else 0
-    convs = assemble_conversations(transcripts, segment_size=seg).localCheckpoint()
-    mentions = run_tagger(convs, StubLexiconTagger(synth.tag_lexicon_entries()), cfg).localCheckpoint()
-    links = run_linker(
-        spark,
-        mentions,
-        encoder=StubEncoder(cfg.embedding_dim),
-        cfg=cfg,
-        side=fixtures.linker_side_data(spark),
+    """events-derived transcripts → triples (full engine, stub adapters):
+    the declared chain through triples, held in memory with the
+    pipeline's localCheckpoint cut set."""
+    # DEFAULT_CONFIG is looked up here at call time, so a script may swap
+    # it on this module (scripts/profile_weak.py)
+    out = run_chain(
+        KGRun(spark, DEFAULT_CONFIG),
+        derive_transcripts(spark, sf_dir, replicate),
+        checkpoint_cuts,
+        until="triples",
     )
-    # localCheckpoint (not cache): cache kept the cleaner's hash(conv_id)
-    # partitioning visible so the pair chain planned shuffle-free — but it
-    # also re-embedded the ENTIRE linker plan at every cached reference
-    # (measured: the pair-chain plan text was 1.4 MB with cache vs 8 KB
-    # checkpointed), and Catalyst + per-stage AQE re-optimization over
-    # that monster was a ~7 s SERIAL driver gap per run — the dominant
-    # non-scaling term in the N→4N bench. The checkpoint trades that for
-    # a few small re-shuffles of the (narrow) link rows, which scale with
-    # cores instead of burning fixed driver time.
-    cleaned = run_cleaner(links).localCheckpoint()
-    spans = pair_spans(generate_pairs(cleaned, cfg), cleaned)
-    # weight-aware classify bucketing: the estimate reads only the two
-    # checkpointed stage outputs above (never the pairs subtree)
-    weights = estimate_pair_weights(cleaned, convs, cfg)
-    preds = classify_pair_spans(spans, convs, None, cfg, pair_weights=weights)
-    return aggregate_triples(preds)
+    return out["triples"]
 
 
 def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:

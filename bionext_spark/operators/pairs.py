@@ -8,7 +8,7 @@
   src/extractor/data.py:40-61; at inference every surviving pair is a
   candidate). The per-conversation pair cap bounds the O(n²) blow-up on
   entity-rich conversations at scale (the reference has no cap; capped
-  counts surface in stage metrics).
+  pairs are dropped uncounted).
 * J6 mention instrumentation: pairs × mentions equi-join on conv_id; the
   reference's "first matching comma-part decides entity order" loop
   (extractor/data.py:97-126) becomes min-position arithmetic over the

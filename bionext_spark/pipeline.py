@@ -1,25 +1,50 @@
-"""End-to-end KG construction pipeline with checkpointed stage tables.
+"""The KG stage chain, declared once, and the two ways to materialize it.
 
-The reference's ``for module in pipeline: input_file = module.run(...)``
-fold (main.py:115-116) becomes a chain of DataFrame stage functions, each
-committed to a snapshotted table via StageCatalog so any stage resumes
-idempotently. Launch on a cluster with spark-submit --py-files
-(see scripts/submit.sh); locally via ``run(spark, transcripts_path, ...)``.
+The reference declares its pipeline once, as ``[Tagger, Linker,
+Extractor]``, and folds one input through it (main.py:85-100, 115-116).
+Here ``CHAIN`` is that declaration: eight named stages, transcripts →
+conversations → mentions → links → clean_links → pairs → triples →
+vertices/edges. Each stage names the stages whose snapshot ids key it and
+builds its DataFrame from the outputs already produced. ``run_chain``
+folds the list through a materializer ``(stage, build, inputs) ->
+DataFrame``, which decides only how each stage's output is held:
+
+* ``CatalogMaterializer`` commits every stage as a snapshotted table
+  through ``StageCatalog.run_stage``, so any stage resumes idempotently
+  (``run``; launch on a cluster with spark-submit --py-files, see
+  scripts/submit.sh).
+* ``checkpoint_cuts`` calls ``localCheckpoint`` on the ``CUTS`` stages
+  only and leaves the rest lazy (``flagship.run_kg_pipeline``).
+  ``localCheckpoint`` caches the rows and truncates the logical plan;
+  without a cut the chained plan grows to hundreds of operators and
+  Catalyst's per-query analysis dominates wall time. ``cache`` is no
+  substitute: it kept the cleaner's partitioning visible, but it
+  re-embedded the whole linker plan at every cached reference (pair-chain
+  plan text 1.4 MB cached vs 8 KB checkpointed), a ~7 s serial driver gap
+  per run; the cut costs a few small re-shuffles of the narrow link rows
+  instead, which scale with cores. ``links`` and ``pairs`` stay lazy:
+  the cleaner and the classify kernel consume them in the same plan, so
+  ``pair_spans`` flows into the kernel unmaterialized. Cutting ``pairs``
+  double-counted work at 8 cores (ARCHITECTURE.md, "Section tables need
+  the fused plan"), and cutting every stage measured no faster on 4 CPUs,
+  so the cut set is a constant, not an option.
 """
 
 from __future__ import annotations
 
 import dataclasses
 import json
-from dataclasses import dataclass
+from dataclasses import dataclass, field
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from bionext_spark import synth
 from bionext_spark.adapters import (
-    StubEncoder,
+    EncoderAdapter,
+    RelationAdapter,
     StubLexiconTagger,
+    TaggerAdapter,
 )
 from bionext_spark.config import DEFAULT_CONFIG, PipelineConfig
 from bionext_spark.operators.assemble import assemble_conversations
@@ -29,11 +54,173 @@ from bionext_spark.operators.extraction import (
     classify_pair_spans,
     estimate_pair_weights,
 )
-from bionext_spark.operators.linking import run_cleaner, run_linker
+from bionext_spark.operators.linking import LinkerSideData, run_cleaner, run_linker
 from bionext_spark.operators.pairs import generate_pairs, pair_spans
 from bionext_spark.operators.tagging import run_tagger
 from bionext_spark.sources import fixtures
 from bionext_spark.sources.catalog import Manifest, StageCatalog
+
+# The chain's one source: the transcripts table every run starts from.
+SOURCE = "transcripts"
+
+
+@dataclass
+class KGRun:
+    """Per-run set-up every stage build reads. ``None`` adapters are the
+    deterministic stubs, ``side`` defaults to the session-memoized fixture
+    lexicons, and the seq-variant hops stay off unless ``litvar``/``llm``
+    are given (``gene_symbols`` then defaults to the fixture symbols)."""
+
+    spark: SparkSession
+    cfg: PipelineConfig = DEFAULT_CONFIG
+    tagger: TaggerAdapter | None = None
+    encoder: EncoderAdapter | None = None
+    classifier: RelationAdapter | None = None
+    side: LinkerSideData | None = None
+    gene_symbols: DataFrame | None = None
+    litvar: object = None
+    llm: object = None
+    fewshot_examples: DataFrame | None = None
+    _graph: tuple[DataFrame, DataFrame] | None = field(default=None, init=False, repr=False)
+
+    def graph(self, out: dict[str, DataFrame]) -> tuple[DataFrame, DataFrame]:
+        """(vertices, edges), shared by the two graph stages: one
+        ``materialize_graph`` call per run, and none when both resume
+        (it runs the eager connected-components loop)."""
+        if self._graph is None:
+            self._graph = materialize_graph(out["clean_links"], out["triples"])
+        return self._graph
+
+
+@dataclass(frozen=True)
+class Stage:
+    name: str
+    # The stages (or SOURCE) whose snapshot ids key this one's snapshot.
+    inputs: tuple[str, ...]
+    build: Callable[[KGRun, dict[str, DataFrame]], DataFrame]
+
+
+def _conversations(run: KGRun, out: dict[str, DataFrame]) -> DataFrame:
+    # salted two-phase assembly: conversations longer than
+    # skew_turns_threshold spread over many reducers in phase 1
+    seg = run.cfg.skew_turns_threshold if run.cfg.salt_buckets > 0 else 0
+    return assemble_conversations(out[SOURCE], segment_size=seg)
+
+
+def _mentions(run: KGRun, out: dict[str, DataFrame]) -> DataFrame:
+    tagger = run.tagger if run.tagger is not None else StubLexiconTagger(synth.tag_lexicon_entries())
+    return run_tagger(out["conversations"], tagger, run.cfg)
+
+
+def _links(run: KGRun, out: dict[str, DataFrame]) -> DataFrame:
+    gene_symbols = run.gene_symbols
+    if gene_symbols is None and (run.litvar is not None or run.llm is not None):
+        gene_symbols = fixtures.gene_symbols_df(run.spark)
+    return run_linker(
+        run.spark,
+        out["mentions"],
+        encoder=run.encoder,
+        cfg=run.cfg,
+        gene_symbols=gene_symbols,
+        litvar=run.litvar,
+        llm=run.llm,
+        side=run.side if run.side is not None else fixtures.linker_side_data(run.spark),
+        fewshot_examples=run.fewshot_examples,
+    )
+
+
+def _pairs(run: KGRun, out: dict[str, DataFrame]) -> DataFrame:
+    # the span lists, not the marked text: the marked text is
+    # ~|pairs|×|doc| bytes and is produced transiently inside the fused
+    # classifier kernel instead
+    return pair_spans(generate_pairs(out["clean_links"], run.cfg), out["clean_links"])
+
+
+def _triples(run: KGRun, out: dict[str, DataFrame]) -> DataFrame:
+    # weight-aware classify bucketing: the estimate reads only the
+    # clean_links/conversations outputs, never the pairs subtree
+    # (extraction.estimate_pair_weights)
+    convs = out["conversations"]
+    weights = estimate_pair_weights(out["clean_links"], convs, run.cfg)
+    return aggregate_triples(
+        classify_pair_spans(out["pairs"], convs, run.classifier, run.cfg, pair_weights=weights)
+    )
+
+
+CHAIN: tuple[Stage, ...] = (
+    Stage("conversations", (SOURCE,), _conversations),
+    Stage("mentions", ("conversations",), _mentions),
+    Stage("links", ("mentions",), _links),
+    Stage("clean_links", ("links",), lambda run, out: run_cleaner(out["links"])),
+    Stage("pairs", ("clean_links", "conversations"), _pairs),
+    # also reads clean_links, already in its lineage through pairs
+    Stage("triples", ("pairs", "conversations"), _triples),
+    Stage("vertices", ("clean_links", "triples"), lambda run, out: run.graph(out)[0]),
+    Stage("edges", ("clean_links", "triples"), lambda run, out: run.graph(out)[1]),
+)
+
+Materializer = Callable[[str, Callable[[], DataFrame], tuple[str, ...]], DataFrame]
+
+
+def run_chain(
+    run: KGRun,
+    transcripts: DataFrame,
+    materialize: Materializer,
+    until: str = CHAIN[-1].name,
+    seeds: dict[str, DataFrame] | None = None,
+) -> dict[str, DataFrame]:
+    """Fold ``CHAIN`` up to and including ``until`` through
+    ``materialize``; returns every output by stage name.
+
+    ``seeds`` replace the outputs of the stages they name. A seed goes
+    through ``materialize`` with no inputs, and stages needed only to
+    produce a seeded output are not run."""
+    seeds = seeds or {}
+    # Arrow batch size for the kernel stages = the model batch size
+    run.spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(run.cfg.kernel_batch_size))
+    stages = CHAIN[: [s.name for s in CHAIN].index(until) + 1]
+    last_seed = max((i for i, s in enumerate(stages) if s.name in seeds), default=-1)
+    needed = {s.name for s in stages[last_seed + 1 :]}
+    for s in reversed(stages):
+        if s.name in needed and s.name not in seeds:
+            needed.update(s.inputs)
+    out = {SOURCE: transcripts}
+    for s in stages:
+        if s.name in seeds and s.name in needed:
+            out[s.name] = materialize(s.name, lambda df=seeds[s.name]: df, ())
+        elif s.name in needed:
+            out[s.name] = materialize(s.name, lambda s=s: s.build(run, out), s.inputs)
+    return out
+
+
+# The stages the in-memory chain cuts with localCheckpoint (see module doc).
+CUTS = frozenset({"conversations", "mentions", "clean_links"})
+
+
+def checkpoint_cuts(stage: str, build: Callable[[], DataFrame], inputs: tuple[str, ...]) -> DataFrame:
+    df = build()
+    return df.localCheckpoint() if stage in CUTS else df
+
+
+def _fingerprint(cfg: PipelineConfig) -> str:
+    return json.dumps(dataclasses.asdict(cfg), sort_keys=True)
+
+
+class CatalogMaterializer:
+    """Commits each stage through ``StageCatalog.run_stage``, keyed by the
+    snapshot ids of its inputs (``SOURCE`` maps to ``input_snapshot``)."""
+
+    def __init__(self, catalog: StageCatalog, cfg: PipelineConfig, input_snapshot: str):
+        self.catalog = catalog
+        self.fp = _fingerprint(cfg)
+        self.snapshots = {SOURCE: input_snapshot}
+        self.manifests: dict[str, Manifest] = {}
+
+    def __call__(self, stage: str, build: Callable[[], DataFrame], inputs: tuple[str, ...]) -> DataFrame:
+        df, m = self.catalog.run_stage(stage, build, [self.snapshots[i] for i in inputs], self.fp)
+        self.snapshots[stage] = m.snapshot_id
+        self.manifests[stage] = m
+        return df
 
 
 @dataclass
@@ -48,10 +235,6 @@ class PipelineResult:
         }
 
 
-def _fingerprint(cfg: PipelineConfig) -> str:
-    return json.dumps(dataclasses.asdict(cfg), sort_keys=True)
-
-
 def run(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -61,132 +244,10 @@ def run(
     litvar=None,
     llm=None,
 ) -> PipelineResult:
-    """transcripts → triples + graph, all stages checkpointed.
-
-    Stage boundaries repartition by conv_id bucket so per-conversation
-    stages stay co-located (the `bucket(N, conv_id)` layout from
-    SURVEY.md §1.4)."""
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(cfg.kernel_batch_size))
-    cat = StageCatalog(spark, checkpoint_dir, bucket_count=cfg.bucket_count)
-    fp = _fingerprint(cfg)
-    manifests: dict[str, Manifest] = {}
-
-    tagger = StubLexiconTagger(synth.tag_lexicon_entries())
-    encoder = StubEncoder(cfg.embedding_dim)
-
-    seg = cfg.skew_turns_threshold if cfg.salt_buckets > 0 else 0
-    convs, m = cat.run_stage(
-        "conversations",
-        lambda: assemble_conversations(transcripts, segment_size=seg),
-        [input_snapshot],
-        fp,
+    """transcripts → triples + graph, every stage committed to a
+    snapshotted table under ``checkpoint_dir`` (resumes what is there)."""
+    commit = CatalogMaterializer(
+        StageCatalog(spark, checkpoint_dir, bucket_count=cfg.bucket_count), cfg, input_snapshot
     )
-    manifests["conversations"] = m
-
-    mentions, m = cat.run_stage(
-        "mentions", lambda: run_tagger(convs, tagger, cfg), [m.snapshot_id], fp
-    )
-    manifests["mentions"] = m
-
-    def _link() -> DataFrame:
-        return run_linker(
-            spark,
-            mentions,
-            encoder=encoder,
-            cfg=cfg,
-            gene_symbols=fixtures.gene_symbols_df(spark),
-            litvar=litvar,
-            llm=llm,
-            side=fixtures.linker_side_data(spark),
-        )
-
-    links, m = cat.run_stage("links", _link, [m.snapshot_id], fp)
-    manifests["links"] = m
-
-    cleaned, m = cat.run_stage("clean_links", lambda: run_cleaner(links), [m.snapshot_id], fp)
-    manifests["clean_links"] = m
-
-    # pairs stage table stores the span lists, not the marked text: the
-    # marked text is ~|pairs|×|doc| bytes and is produced transiently
-    # inside the fused classifier kernel instead.
-    pairs, m = cat.run_stage(
-        "pairs",
-        lambda: pair_spans(generate_pairs(cleaned, cfg), cleaned),
-        [manifests["clean_links"].snapshot_id, manifests["conversations"].snapshot_id],
-        fp,
-    )
-    manifests["pairs"] = m
-
-    triples, m = cat.run_stage(
-        "triples",
-        # weight-aware classify bucketing: the estimate reads only the
-        # durable clean_links/conversations stage tables, never the pairs
-        # subtree (extraction.estimate_pair_weights)
-        lambda: aggregate_triples(
-            classify_pair_spans(
-                pairs, convs, None, cfg,
-                pair_weights=estimate_pair_weights(cleaned, convs, cfg),
-            )
-        ),
-        [m.snapshot_id, manifests["conversations"].snapshot_id],
-        fp,
-    )
-    manifests["triples"] = m
-
-    def _graph_vertices() -> DataFrame:
-        v, e = materialize_graph(cleaned, triples)
-        # stash edges for the paired stage below (deterministic given inputs)
-        _graph_vertices.edges = e  # type: ignore[attr-defined]
-        return v
-
-    vertices, m_v = cat.run_stage(
-        "vertices",
-        _graph_vertices,
-        [manifests["clean_links"].snapshot_id, manifests["triples"].snapshot_id],
-        fp,
-    )
-    manifests["vertices"] = m_v
-    # lazy fallback: materialize_graph runs the eager connected-components
-    # loop, so it must only be invoked when the vertices stage was resumed
-    # from a committed snapshot (a getattr default argument would evaluate
-    # it eagerly and run CC twice on every fresh run)
-    edges, m_e = cat.run_stage(
-        "edges",
-        lambda: _graph_vertices.edges  # type: ignore[attr-defined]
-        if hasattr(_graph_vertices, "edges")
-        else materialize_graph(cleaned, triples)[1],
-        [manifests["clean_links"].snapshot_id, manifests["triples"].snapshot_id],
-        fp,
-    )
-    manifests["edges"] = m_e
-
-    return PipelineResult(triples=triples, manifests=manifests)
-
-
-def count_turns(transcripts: DataFrame) -> int:
-    return transcripts.count()
-
-
-def evaluate_triples(got: DataFrame, expected: DataFrame) -> dict[str, float]:
-    """P/R/F1 over exact (conv_id, subj, pred, obj) matches — the contract
-    from FIXTURES.md §6 (reference metric shape:
-    src/extractor/hf_training.py:24-43). Novelty scored separately."""
-    key = ["conv_id", "subj", "pred", "obj"]
-    g = got.select(*key).distinct()
-    e = expected.select(*key).distinct()
-    tp = g.join(e, key).count()
-    n_got, n_exp = g.count(), e.count()
-    p = tp / n_got if n_got else 0.0
-    r = tp / n_exp if n_exp else 0.0
-    f1 = 2 * p * r / (p + r) if (p + r) else 0.0
-    nov_match = (
-        got.select(*key, "novel").join(expected.select(*key, F.col("novel").alias("nov_e")), key)
-        .filter(F.col("novel") == F.col("nov_e"))
-        .count()
-    )
-    return {
-        "precision": p,
-        "recall": r,
-        "f1": f1,
-        "novelty_accuracy": nov_match / tp if tp else 0.0,
-    }
+    out = run_chain(KGRun(spark, cfg, litvar=litvar, llm=llm), transcripts, commit)
+    return PipelineResult(triples=out["triples"], manifests=commit.manifests)

@@ -149,15 +149,8 @@ def main() -> int:
         HFTaggerAdapter,
     )
     from bionext_spark.config import DEFAULT_CONFIG
-    from bionext_spark.operators.assemble import assemble_conversations
-    from bionext_spark.operators.extraction import (
-        aggregate_triples,
-        classify_pair_spans,
-        estimate_pair_weights,
-    )
-    from bionext_spark.operators.linking import LinkerSideData, run_cleaner, run_linker
-    from bionext_spark.operators.pairs import generate_pairs, pair_spans
-    from bionext_spark.operators.tagging import run_tagger
+    from bionext_spark.operators.linking import LinkerSideData, run_cleaner
+    from bionext_spark.pipeline import KGRun, checkpoint_cuts, run_chain
     from bionext_spark.session import get_spark
     from bionext_spark.sources import kb
     from bionext_spark.sources.bioc import (
@@ -171,77 +164,51 @@ def main() -> int:
     cfg = DEFAULT_CONFIG
     spark = get_spark("parity-harness", cores=args.cores)
     transcripts = read_bioc_as_transcripts(spark, args.source_file)
-    convs = assemble_conversations(
-        transcripts, segment_size=cfg.skew_turns_threshold if cfg.salt_buckets else 0
-    ).localCheckpoint()
 
+    # --from-stage seeds stand in for the outputs of the stages they name;
+    # the chain then runs only what the seeds do not cover
+    seeds = {}
     if args.from_stage == "linker":
-        cleaned = run_cleaner(
+        seeds["clean_links"] = run_cleaner(
             read_bioc_annotations(spark, args.source_file),
             order_cols=("turn_idx", "ann_idx"),
-        ).localCheckpoint()
-    else:
-        if args.from_stage == "tagger":
-            mentions = read_bioc_annotations(spark, args.source_file)
-        else:
-            if args.stub_models:
-                from bionext_spark import synth
-                from bionext_spark.adapters import StubLexiconTagger
+        )
+    elif args.from_stage == "tagger":
+        # the file's identifiers are what the linker must produce, so the
+        # seeded mentions carry none (run_linker adds linked_id)
+        seeds["mentions"] = read_bioc_annotations(spark, args.source_file).drop("linked_id")
 
-                tagger = StubLexiconTagger(synth.tag_lexicon_entries())
-            else:
-                tagger = HFTaggerAdapter(args.tagger_checkpoint, device=args.device)
-            mentions = run_tagger(convs, tagger, cfg)
-        mentions = mentions.localCheckpoint()
-
-        if args.stub_models:
-            from bionext_spark.adapters import StubEncoder
-
-            encoder = StubEncoder(cfg.embedding_dim)
-        else:
-            encoder = HFEncoderAdapter(args.encoder_checkpoint, device=args.device)
+    # None adapters are the chain's deterministic stubs; a model is loaded
+    # only for a stage the seeds leave to run
+    run = KGRun(spark, cfg)
+    if not args.stub_models:
+        run.classifier = HFRelationAdapter(args.extractor_checkpoint, device=args.device)
+        if args.from_stage == "raw":
+            run.tagger = HFTaggerAdapter(args.tagger_checkpoint, device=args.device)
+        if args.from_stage != "linker":
+            run.encoder = HFEncoderAdapter(args.encoder_checkpoint, device=args.device)
+    if args.from_stage != "linker":
         gene_lex = kb.load_gene_lexicon(spark, args.kb_folder)
         taxa = {r["tax_id"] for r in gene_lex.select("tax_id").distinct().collect()}
-        side = LinkerSideData.build(
+        run.side = LinkerSideData.build(
             spark,
             kb.train_direct_from_bioc(spark, args.dataset_folder, known_taxa=taxa),
             kb.load_concept_lexicon(spark, args.kb_folder),
             gene_lex,
             kb.load_variant_lexicon(spark, args.kb_folder),
         )
-        litvar = llm = fewshot = None
+        run.gene_symbols = kb.load_gene_symbols(spark, args.kb_folder)
         if args.litvar_memo:
-            litvar = MemoizedLookup(spark, args.litvar_memo, _litvar_adapter())
+            run.litvar = MemoizedLookup(spark, args.litvar_memo, _litvar_adapter())
         if args.llm_address:
-            llm = MemoizedLookup(
+            run.llm = MemoizedLookup(
                 spark, args.llm_memo or (args.litvar_memo or "/tmp") + "/llm",
                 FewShotPromptLLM(_llm_complete(args.llm_address, args.llm_model)),
             )
-            fewshot = kb.load_variant_examples(spark, args.kb_folder, args.dataset_folder)
-        links = run_linker(
-            spark,
-            mentions,
-            encoder=encoder,
-            cfg=cfg,
-            gene_symbols=kb.load_gene_symbols(spark, args.kb_folder),
-            litvar=litvar,
-            llm=llm,
-            side=side,
-            fewshot_examples=fewshot,
-        )
-        cleaned = run_cleaner(links).localCheckpoint()
-
-    if args.stub_models:
-        classifier = None  # classify_pair_spans falls back to the stub
-    else:
-        classifier = HFRelationAdapter(args.extractor_checkpoint, device=args.device)
-    spans = pair_spans(generate_pairs(cleaned, cfg), cleaned)
-    triples = aggregate_triples(
-        classify_pair_spans(
-            spans, convs, classifier, cfg,
-            pair_weights=estimate_pair_weights(cleaned, convs, cfg),
-        )
-    ).cache()
+            run.fewshot_examples = kb.load_variant_examples(spark, args.kb_folder, args.dataset_folder)
+    triples = run_chain(
+        run, transcripts, checkpoint_cuts, until="triples", seeds=seeds
+    )["triples"].cache()
     if args.out:
         write_bioc(triples, args.out)
 

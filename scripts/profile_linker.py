@@ -21,13 +21,10 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from bionext_spark import synth
-    from bionext_spark.adapters import StubLexiconTagger, StubEncoder
     from bionext_spark.config import DEFAULT_CONFIG
     from bionext_spark.flagship import derive_transcripts
     from bionext_spark.operators import linking as L
-    from bionext_spark.operators.assemble import assemble_conversations
-    from bionext_spark.operators.tagging import run_tagger
+    from bionext_spark.pipeline import CHAIN, KGRun, checkpoint_cuts, run_chain
     from bionext_spark.session import get_spark
     from bionext_spark.sources import fixtures
 
@@ -35,8 +32,9 @@ def main() -> None:
     spark = get_spark(f"profile-linker-{args.cores}", cores=args.cores,
                       shuffle_partitions=max(args.cores, 8))
     transcripts = derive_transcripts(spark, args.sf_dir, args.replicate)
-    convs = assemble_conversations(transcripts, segment_size=128).localCheckpoint()
-    mentions = run_tagger(convs, StubLexiconTagger(synth.tag_lexicon_entries()), cfg).localCheckpoint()
+    run = KGRun(spark, cfg)
+    chain_out = run_chain(run, transcripts, checkpoint_cuts, until="mentions")
+    mentions = chain_out["mentions"]
 
     out = {"cores": args.cores}
 
@@ -53,7 +51,6 @@ def main() -> None:
     concepts = fixtures.lexicon_concepts_df(spark)
     genes = fixtures.lexicon_genes_df(spark)
     variants = fixtures.lexicon_variants_df(spark)
-    enc = StubEncoder(cfg.embedding_dim)
 
     mc = step("mentions_cache", lambda: mentions.cache())
     m = mentions.select(
@@ -101,9 +98,9 @@ def main() -> None:
     ).select("conv_id", "mention_id", F.lit("GeneOrGeneProduct").alias("label"),
              "cand", F.col("rank").cast("long").alias("rank"), "priority").localCheckpoint())
 
-    # full run for the end-to-end wall
+    # the chain's whole links stage, for the end-to-end wall
     t0 = time.time()
-    links = L.run_linker(spark, mentions, train, concepts, genes, variants, enc, cfg)
+    links = next(s for s in CHAIN if s.name == "links").build(run, chain_out)
     out["n_links"] = links.count()
     out["run_linker_total"] = round(time.time() - t0, 2)
     print(json.dumps(out))

@@ -22,30 +22,18 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from bionext_spark import synth
-    from bionext_spark.adapters import StubLexiconTagger, StubEncoder
     from bionext_spark.config import DEFAULT_CONFIG
     from bionext_spark.flagship import derive_transcripts
-    from bionext_spark.operators.assemble import assemble_conversations
-    from bionext_spark.operators.linking import run_cleaner, run_linker
     from bionext_spark.operators.pairs import generate_pairs, pair_spans
-    from bionext_spark.operators.tagging import run_tagger
+    from bionext_spark.pipeline import KGRun, checkpoint_cuts, run_chain
     from bionext_spark.session import get_spark
-    from bionext_spark.sources import fixtures
 
     cfg = DEFAULT_CONFIG
     spark = get_spark(f"profile-pairs-{args.cores}", cores=args.cores,
                       shuffle_partitions=max(args.cores, 8))
     transcripts = derive_transcripts(spark, args.sf_dir, args.replicate)
-    convs = assemble_conversations(transcripts).localCheckpoint()
-    mentions = run_tagger(convs, StubLexiconTagger(synth.tag_lexicon_entries()), cfg).localCheckpoint()
-    links = run_linker(
-        spark, mentions,
-        fixtures.train_direct_df(spark), fixtures.lexicon_concepts_df(spark),
-        fixtures.lexicon_genes_df(spark), fixtures.lexicon_variants_df(spark),
-        StubEncoder(cfg.embedding_dim), cfg,
-    ).localCheckpoint()
-    cleaned = run_cleaner(links).localCheckpoint()
+    cleaned = run_chain(KGRun(spark, cfg), transcripts, checkpoint_cuts,
+                        until="clean_links")["clean_links"]
 
     out = {"cores": args.cores}
     t0 = time.time()

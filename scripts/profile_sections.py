@@ -1,16 +1,21 @@
 #!/usr/bin/env python
-"""Per-section N-vs-4N scaling decomposition of the KG pipeline.
+"""Per-stage N-vs-4N scaling decomposition of the in-memory KG chain.
 
-Times each stage of run_kg_pipeline separately (materializing at every
-boundary with localCheckpoint, exactly like the flagship plan does) at
-two core counts in back-to-back fresh subprocess JVMs, and prints a
-per-section table: seconds at N, seconds at 4N, the section's own
-N→4N efficiency, and its share of the 4N wall. This names WHERE the
-remaining non-scaling seconds live (the serial constant the local
-N→4N gate pays; a real 4N-executor cluster amortizes per-job driver
-constants across machines).
+Runs ``flagship.run_kg_pipeline``'s plan (the declared chain through
+triples, materialized by ``pipeline.checkpoint_cuts``) at two core counts
+in back-to-back fresh subprocess JVMs, timing each stage's
+materialization, and prints a per-stage table: seconds at N, seconds at
+4N, the stage's own N→4N efficiency, and its share of the 4N wall. This
+names WHERE the remaining non-scaling seconds live.
+
+The timing adds no cut: stages the chain leaves lazy (``links``,
+``pairs``) show only what their build does eagerly (for ``links``, the
+linker's side data and driver-side set-up), and the rest of their work is
+charged to the next stage that runs it (``clean_links``, ``triples``; the
+triples row includes the final noop write).
 
 Usage: python scripts/profile_sections.py --n 2 --replicate 12
+       python scripts/profile_sections.py --cores 4 --replicate 8   # one point
 """
 
 from __future__ import annotations
@@ -27,30 +32,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def run_sections(cores: int, replicate: int, sf_dir: str, warmup: bool,
                  reps: int = 1) -> dict:
-    from bionext_spark import synth
-    from bionext_spark.adapters import StubEncoder, StubLexiconTagger
-    from bionext_spark.config import DEFAULT_CONFIG
     from bionext_spark.flagship import derive_transcripts, run_kg_pipeline
-    from bionext_spark.operators.assemble import assemble_conversations
-    from bionext_spark.operators.extraction import (
-        aggregate_triples,
-        classify_pair_spans,
-        estimate_pair_weights,
-    )
-    from bionext_spark.operators.linking import run_cleaner, run_linker
-    from bionext_spark.operators.pairs import generate_pairs, pair_spans
-    from bionext_spark.operators.tagging import run_tagger
+    from bionext_spark.pipeline import KGRun, checkpoint_cuts, run_chain
     from bionext_spark.session import get_spark
-    from bionext_spark.sources import fixtures
 
-    cfg = DEFAULT_CONFIG
     mem = os.environ.get("SPARK_DRIVER_MEM") or f"{max(8, (cores * 3) // 2)}g"
     spark = get_spark(
         f"sections-{cores}", cores=cores, shuffle_partitions=max(cores, 8),
         extra_conf={"spark.driver.memory": mem},
-    )
-    spark.conf.set(
-        "spark.sql.execution.arrow.maxRecordsPerBatch", str(cfg.kernel_batch_size)
     )
     if warmup:
         warm = sf_dir.replace("sf0.1", "sf0.01")
@@ -58,57 +47,29 @@ def run_sections(cores: int, replicate: int, sf_dir: str, warmup: bool,
             "noop"
         ).mode("overwrite").save()
 
-    out: dict = {"cores": cores, "sections": {}}
+    out: dict = {"cores": cores, "replicate": replicate}
 
-    # reps > 1: run the identical section chain that many times in this
-    # one warm JVM and keep the LAST pass — the bench's min-of-reps
-    # protocol showed rep 1 carries 20-25% of one-time JIT/heap-growth
-    # cost that rep 2+ (the steady state the gate measures) does not.
+    # reps > 1: run the identical chain that many times in this one warm
+    # JVM and keep the LAST pass — the bench's min-of-reps protocol showed
+    # rep 1 carries 20-25% of one-time JIT/heap-growth cost that rep 2+
+    # (the steady state the gate measures) does not.
     for _ in range(max(1, reps)):
-        out["sections"] = {}
+        sections: dict[str, float] = {}
         t_all = time.time()
 
-        def timed(name, fn):
+        def timed(stage, build, inputs):
             t0 = time.time()
-            r = fn()
-            out["sections"][name] = round(time.time() - t0, 2)
-            return r
+            df = checkpoint_cuts(stage, build, inputs)
+            sections[stage] = time.time() - t0
+            return df
 
-        seg = cfg.skew_turns_threshold if cfg.salt_buckets > 0 else 0
-        convs = timed(
-            "assemble",
-            lambda: assemble_conversations(
-                derive_transcripts(spark, sf_dir, replicate), segment_size=seg
-            ).localCheckpoint(),
-        )
-        mentions = timed(
-            "tagger",
-            lambda: run_tagger(
-                convs, StubLexiconTagger(synth.tag_lexicon_entries()), cfg
-            ).localCheckpoint(),
-        )
-        cleaned = timed(
-            "linker+cleaner",
-            lambda: run_cleaner(
-                run_linker(
-                    spark, mentions, encoder=StubEncoder(cfg.embedding_dim), cfg=cfg,
-                    side=fixtures.linker_side_data(spark),
-                )
-            ).localCheckpoint(),
-        )
-        spans = timed(
-            "pairs+spans",
-            lambda: pair_spans(generate_pairs(cleaned, cfg), cleaned).localCheckpoint(),
-        )
-
-        def _classify():
-            w = estimate_pair_weights(cleaned, convs, cfg)
-            df = aggregate_triples(
-                classify_pair_spans(spans, convs, None, cfg, pair_weights=w)
-            )
-            df.write.format("noop").mode("overwrite").save()
-
-        timed("classify+agg", _classify)
+        triples = run_chain(
+            KGRun(spark), derive_transcripts(spark, sf_dir, replicate), timed, until="triples"
+        )["triples"]
+        t0 = time.time()
+        triples.write.format("noop").mode("overwrite").save()
+        sections["triples"] += time.time() - t0
+        out["sections"] = {k: round(v, 2) for k, v in sections.items()}
         out["total"] = round(time.time() - t_all, 2)
     spark.stop()
     return out
@@ -140,7 +101,7 @@ def main() -> None:
         return json.loads(line)
 
     rn, r4 = one(args.n), one(4 * args.n)
-    print(f"{'section':16} {'N='+str(args.n):>8} {'4N='+str(4*args.n):>8} "
+    print(f"{'stage':16} {'N='+str(args.n):>8} {'4N='+str(4*args.n):>8} "
           f"{'eff':>6} {'4N share':>9}")
     for k in rn["sections"]:
         a, b = rn["sections"][k], r4["sections"][k]

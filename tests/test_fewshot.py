@@ -5,6 +5,8 @@ consumed by the LLM hop through the memo lookup's context column."""
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 
@@ -228,13 +230,20 @@ def test_relational_fallback_empty_shots_and_k_cap(spark, examples_df):
     assert [(r["text_key"], list(r["shots"])) for r in rows] == [("q_orthogonal", [])]
 
 
+REFERENCE_SEQ_VARIANT = "/root/reference/src/linker/seq_variant.py"
+
+
+@pytest.mark.skipif(
+    not os.path.exists(REFERENCE_SEQ_VARIANT),
+    reason=f"reference source not mounted: {REFERENCE_SEQ_VARIANT}",
+)
 def test_prompt_verbatim_vs_reference_source():
     """The prompt must be BYTE-identical to the reference's (seq_variant.py
     :244-268): extract the reference's own triple-quoted literal and
     replay its concatenation logic, then compare whole strings."""
     import re as _re
 
-    src = open("/root/reference/src/linker/seq_variant.py").read()
+    src = open(REFERENCE_SEQ_VARIANT).read()
     header = _re.search(r'prompt = """(.*?)"""', src, _re.S).group(1)
     shots = [
         {"gene": "BRAF", "mention": "v600e", "code": "p|SUB|V|600|E"},

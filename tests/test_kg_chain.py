@@ -1,0 +1,137 @@
+"""The declared KG chain (pipeline.CHAIN) and its two materializers.
+
+Spark-free: the fold's order, seeds and resume keys. With Spark: the
+in-memory chain (flagship.run_kg_pipeline) equals the pure-Python oracle,
+and the catalog chain (pipeline.run) commits the same triples.
+"""
+
+from __future__ import annotations
+
+from types import SimpleNamespace
+
+import pytest
+
+from bionext_spark import pipeline as P
+from bionext_spark.config import DEFAULT_CONFIG
+from bionext_spark.sources.catalog import StageCatalog
+
+SF = "/root/testdata/sf0.001"
+TRIPLE_COLS = ["conv_id", "subj", "pred", "obj", "novel"]
+
+# The ids pipeline.run committed before the chain was declared as data:
+# checkpoint directories written by earlier versions must still resume.
+PINNED_SNAPSHOTS = {
+    "conversations": "e43a07b026e67e58",
+    "mentions": "5e96e62877bc21f4",
+    "links": "30a6ff09aa867d53",
+    "clean_links": "77b41d6d280bd294",
+    "pairs": "83df37317673f823",
+    "triples": "f000219bcbb3e34f",
+    "vertices": "1251b3d9cbd717db",
+    "edges": "c8c699e9c893a029",
+}
+
+
+def _run_without_spark() -> P.KGRun:
+    return P.KGRun(SimpleNamespace(conf=SimpleNamespace(set=lambda key, value: None)))
+
+
+class _IdOnlyCatalog:
+    """Computes each stage's snapshot id the way StageCatalog.run_stage
+    does, without building or writing anything."""
+
+    def run_stage(self, stage, fn, inputs, config_fingerprint):
+        return stage, SimpleNamespace(
+            snapshot_id=StageCatalog.snapshot_id(stage, inputs, config_fingerprint)
+        )
+
+
+def test_catalog_chain_reproduces_pinned_snapshot_ids():
+    commit = P.CatalogMaterializer(_IdOnlyCatalog(), DEFAULT_CONFIG, "input")
+    out = P.run_chain(_run_without_spark(), None, commit)
+    assert list(out) == [P.SOURCE, *PINNED_SNAPSHOTS]
+    assert {s: m.snapshot_id for s, m in commit.manifests.items()} == PINNED_SNAPSHOTS
+
+
+def test_seeds_replace_their_stages_and_prune_what_only_feeds_them():
+    calls = []
+
+    def record(stage, build, inputs):
+        calls.append((stage, inputs))
+        return stage
+
+    seed = object()
+    out = P.run_chain(
+        _run_without_spark(), None, record, until="triples", seeds={"clean_links": seed}
+    )
+    # mentions and links only feed clean_links, so they never run
+    assert calls == [
+        ("conversations", (P.SOURCE,)),
+        ("clean_links", ()),
+        ("pairs", ("clean_links", "conversations")),
+        ("triples", ("pairs", "conversations")),
+    ]
+    assert "links" not in out and "vertices" not in out
+
+
+def test_graph_stages_share_one_materialize_graph_call(monkeypatch):
+    calls = []
+    monkeypatch.setattr(
+        P, "materialize_graph", lambda clean, triples: calls.append((clean, triples)) or ("V", "E")
+    )
+    out = P.run_chain(
+        _run_without_spark(), None, lambda stage, build, inputs: build(),
+        seeds={"clean_links": "C", "triples": "T"},
+    )
+    assert (out["vertices"], out["edges"]) == ("V", "E")
+    assert calls == [("C", "T")]
+
+
+def test_checkpoint_cuts_materializes_exactly_the_cut_set():
+    cut = []
+
+    class _Df:
+        def __init__(self, stage):
+            self.stage = stage
+
+        def localCheckpoint(self):
+            cut.append(self.stage)
+            return self
+
+    for s in P.CHAIN:
+        P.checkpoint_cuts(s.name, lambda s=s: _Df(s.name), s.inputs)
+    assert cut == ["conversations", "mentions", "clean_links"]
+
+
+@pytest.fixture(scope="module")
+def flagship_triples(spark):
+    from bionext_spark.flagship import run_kg_pipeline
+
+    return sorted(tuple(r) for r in run_kg_pipeline(spark, SF).select(*TRIPLE_COLS).collect())
+
+
+def test_in_memory_chain_matches_oracle(spark, flagship_triples):
+    from bionext_spark import kernels as K
+    from bionext_spark import oracle, synth
+    from bionext_spark.flagship import derive_transcripts
+
+    rows = [r.asDict() for r in derive_transcripts(spark, SF).collect()]
+    lex = oracle.Lexicons(
+        synth.lexicon_concepts_rows(),
+        [{**r, "rank": i} for i, r in enumerate(synth.lexicon_genes_rows())],
+        synth.train_direct_rows(),
+        synth.lexicon_variants_rows(),
+    )
+    out = oracle.run_pipeline(rows, lex, K.build_tag_lexicon(synth.tag_lexicon_entries()))
+    expected = sorted(tuple(t[c] for c in TRIPLE_COLS) for t in out["triples"])
+    assert len(expected) == 537
+    assert flagship_triples == expected
+
+
+def test_catalog_chain_commits_the_in_memory_triples(spark, flagship_triples, tmp_path):
+    from bionext_spark.flagship import derive_transcripts
+
+    result = P.run(spark, derive_transcripts(spark, SF), str(tmp_path))
+    got = sorted(tuple(r) for r in result.triples.select(*TRIPLE_COLS).collect())
+    assert got == flagship_triples
+    assert set(result.manifests) == set(PINNED_SNAPSHOTS)
