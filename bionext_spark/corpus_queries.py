@@ -742,10 +742,12 @@ def kg_canonical_components(spark, sf):
     operators/canonicalize.py): a deterministic multi-relation alias
     graph over documents — star edges within (lang, source) groups and
     within (lang, n_chars % 7) groups; the two relations overlap, so
-    merging them into components requires multi-hop min propagation,
-    which is exactly what the iterative hash-to-min + pointer-jump
-    operator does. Returns every document with its component id
-    (= min doc_id reachable over either alias relation)."""
+    merging them into components requires multi-hop min propagation.
+    At every sf the repo runs, the edges fit ``MAX_DRIVER_ROWS``, so this
+    exercises the operator's driver-side union-find; the hash-to-min
+    loop above the bound is checked by tests/test_canonicalize.py.
+    Returns every document with its component id (= min doc_id
+    reachable over either alias relation)."""
     from bionext_spark.operators.canonicalize import connected_components
 
     d = t(spark, sf, "documents").select("doc_id", "lang", "source", "n_chars")
@@ -766,9 +768,8 @@ def kg_canonical_components(spark, sf):
 
 
 # Oracle: components via recursive reachability closure — component =
-# min reachable vertex, the same definition the iterative operator
-# converges to (closure is O(sum |C|^2) rows: fine at oracle scale,
-# which is exactly why the engine side iterates instead).
+# min reachable vertex, the same definition both engine paths compute
+# (closure is O(sum |C|^2) rows: fine at oracle scale, not beyond it).
 KG_CANONICAL_SQL = """
 WITH RECURSIVE
 e1 AS (

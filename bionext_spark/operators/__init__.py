@@ -11,6 +11,10 @@ from pyspark.sql import DataFrame
 # driver-side constant.
 KERNEL_PARALLELISM_CONF = "spark.bionext.kernel.parallelism"
 
+# Largest side input an operator collects to the driver (lexicons, few-shot
+# examples, alias edges); a larger one takes the operator's distributed path.
+MAX_DRIVER_ROWS = 2_000_000
+
 
 def kernel_repartition(df: DataFrame) -> DataFrame:
     """Round-robin spread ahead of a CPU-bound Arrow kernel stage.

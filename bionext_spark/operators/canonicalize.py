@@ -6,18 +6,28 @@ components over that alias graph pick one canonical id per component, and
 the final knowledge graph materializes as vertex/edge tables with triples
 rewritten to canonical ids.
 
-Connected components use iterative hash-to-min propagation (the standard
-Spark formulation — each round every vertex adopts the minimum component
-id among itself and its neighbors; converges in O(graph diameter) rounds,
-which for alias graphs is tiny). Each round is one shuffle on vertex id;
-``localCheckpoint`` truncates lineage so plans stay bounded — this is the
-only iterative operator in the engine.
+Connected components pick component = min vertex id. When the alias edges
+fit ``MAX_DRIVER_ROWS`` (the operators' shared driver-collect bound) they
+are collected once and resolved by union-find in the driver, and the vertex
+→ component mapping joins back as a broadcast local relation. The loop
+below pays a ``localCheckpoint`` and a changed-row ``count()`` per round,
+~30 Spark jobs on a few dozen rows. The bound limits driver memory; it is
+not a speed crossover. On 4 CPUs, on synthetic graphs of 2-9-vertex trees,
+the driver path took 0.5 / 2.3 / 6.3 / 18 / 44 s at 1k / 100k / 300k / 1M
+/ 2M edges (1.4 GB Python peak at 2M), the loop 3.2 / 11.5 / 31 / 124 s up
+to 1M. Larger edge sets run iterative hash-to-min propagation with pointer
+jumping (the standard Spark formulation): each round is one shuffle on
+vertex id, and ``localCheckpoint`` truncates lineage so plans stay bounded.
+It is the only iterative operator in the engine.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+
+from bionext_spark.operators import MAX_DRIVER_ROWS
 
 
 def alias_edges(links: DataFrame) -> DataFrame:
@@ -39,8 +49,52 @@ def connected_components(vertices: DataFrame, edges: DataFrame, max_iter: int = 
     """(vertex_id) + (a, b) undirected edges → (vertex_id, component).
 
     Component id = min vertex id in the component (min on the column's
-    own type ordering). Each round does (1) one-hop neighbor-min
-    propagation and (2) a pointer jump (component ← component[component]
+    own type ordering). An edge with an endpoint that is not in
+    ``vertices`` is ignored. Up to ``MAX_DRIVER_ROWS`` such edges resolve
+    in the driver (module doc); above it, ``_hash_to_min`` runs."""
+    ids = vertices.select("vertex_id")
+    kept = (
+        edges.join(ids.withColumnRenamed("vertex_id", "a"), "a", "left_semi")
+        .join(ids.withColumnRenamed("vertex_id", "b"), "b", "left_semi")
+        .select("a", "b")
+    )
+    rows = kept.limit(MAX_DRIVER_ROWS + 1).collect()
+    if len(rows) > MAX_DRIVER_ROWS:
+        return _hash_to_min(vertices, edges, max_iter)
+    id_type = vertices.schema["vertex_id"].dataType
+    mapping = vertices.sparkSession.createDataFrame(
+        list(_min_components(rows).items()),
+        StructType([StructField("vertex_id", id_type), StructField("component", id_type)]),
+    )
+    return ids.join(F.broadcast(mapping), "vertex_id", "left").select(
+        "vertex_id", F.coalesce("component", "vertex_id").alias("component")
+    )
+
+
+def _min_components(edges) -> dict:
+    """Union-find over (a, b) pairs → {vertex: min vertex of its set}, for
+    the vertices the edges touch. Each union hangs the larger root under
+    the smaller, so a root is always its set's minimum."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent.setdefault(root, root) != root:
+            root = parent[root]
+        while x != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in list(parent)}
+
+
+def _hash_to_min(vertices: DataFrame, edges: DataFrame, max_iter: int) -> DataFrame:
+    """The distributed form of ``connected_components``. Each round does
+    (1) one-hop neighbor-min propagation and (2) a pointer jump (component ← component[component]
     — monotone, since a component id is itself a vertex whose own
     component can only be smaller), so convergence is O(log diameter)
     rounds, not O(diameter): a 10^6-long alias chain resolves in ~20

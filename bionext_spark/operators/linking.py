@@ -42,6 +42,7 @@ from bionext_spark.config import (
     TAXONOMY_ID_CORRECTIONS,
     PipelineConfig,
 )
+from bionext_spark.operators import MAX_DRIVER_ROWS
 
 CAND_COLS = ("conv_id", "mention_id", "cand", "rank", "priority")
 
@@ -225,7 +226,7 @@ class LinkerSideData:
         lexicon_concepts: DataFrame,
         lexicon_genes: DataFrame,
         lexicon_variants: DataFrame,
-        max_driver_rows: int = 2_000_000,
+        max_driver_rows: int = MAX_DRIVER_ROWS,
     ) -> "LinkerSideData":
         # concepts ALWAYS collect: the KB embedding matrices must fit the
         # driver regardless (they broadcast as numpy, like the reference's
@@ -400,7 +401,7 @@ def select_fewshot_examples(
     encoder: EncoderAdapter,
     k: int = 50,
     threshold: float = 0.6,
-    max_driver_rows: int = 2_000_000,
+    max_driver_rows: int = MAX_DRIVER_ROWS,
 ) -> DataFrame:
     """K5 few-shot example retrieval as a DATAFLOW op (reference
     seq_variant.py:239-268: torch.topk(embeddings @ target, k=50), keep
@@ -649,6 +650,14 @@ def _nearest_org_anchor(
 # ---------------------------------------------------------------------------
 
 
+def _cache(df: DataFrame, caches: list[DataFrame] | None) -> DataFrame:
+    """``df.cache()``, recorded in ``caches`` (see ``run_linker``)."""
+    df = df.cache()
+    if caches is not None:
+        caches.append(df)
+    return df
+
+
 def _variant_candidates(
     mentions: DataFrame,
     c_dict: DataFrame,
@@ -661,6 +670,7 @@ def _variant_candidates(
     encoder: EncoderAdapter | None = None,
     fewshot_k: int = 50,
     fewshot_threshold: float = 0.6,
+    caches: list[DataFrame] | None = None,
 ) -> DataFrame:
     """All SequenceVariant candidate hops as one prioritized frame:
 
@@ -785,9 +795,9 @@ def _variant_candidates(
         ).otherwise(F.col("text"))
         llm_gene = F.coalesce("symbol", "gene_id", F.lit("-"))
         amino = convert_amino_acids_udf()
-        v_llm = v_llm.withColumn("amino_text", amino(llm_text)).withColumn(
+        v_llm = _cache(v_llm.withColumn("amino_text", amino(llm_text)).withColumn(
             "key", F.concat_ws("\x00", F.col("amino_text"), llm_gene)
-        ).cache()
+        ), caches)
         # cache: v_llm's subplan (anchor join + anti-join vs every prior
         # hop) is consumed up to THREE times — few-shot retrieval, the
         # memoized lookup, and the final hop join; uncached, each re-ran
@@ -876,6 +886,7 @@ def run_linker(
     llm=None,
     side: LinkerSideData | None = None,
     fewshot_examples: DataFrame | None = None,
+    caches: list[DataFrame] | None = None,
 ) -> DataFrame:
     """mentions → LINKS (same rows + linked_id/method; '-' = unlinked).
 
@@ -893,13 +904,17 @@ def run_linker(
     (MemoizedLookup instances over S8/K5 adapters) enable the deep
     seq-variant hops (reference seq_variant.py:376-505); with them None
     (the offline default — the engine core makes no network calls) the
-    variant cascade stops at the tmVar lexicon hop."""
+    variant cascade stops at the tmVar lexicon hop.
+
+    ``caches``: every DataFrame this call caches is appended to it, for the
+    caller to unpersist once the links output is materialized
+    (``pipeline.KGRun.release_caches``); left None, they stay cached."""
     encoder = encoder or StubEncoder(cfg.embedding_dim)
     if side is None:
         side = LinkerSideData.build(
             spark, train_direct, lexicon_concepts, lexicon_genes, lexicon_variants
         )
-    mentions = mentions.cache()  # fans into dict join, anchors, final join
+    mentions = _cache(mentions, caches)  # fans into dict join, anchors, final join
 
     def _vote(c: DataFrame, corrections=None, per_label: bool = False) -> DataFrame:
         if vote_impl == "grouped":
@@ -941,10 +956,10 @@ def run_linker(
     )
 
     # --- taxonomy vote first: gene linking anchors on its winners ---
-    tax = _vote(
+    tax = _cache(_vote(
         c_dict.filter(F.col("label") == "OrganismTaxon").drop("label"),
         TAXONOMY_ID_CORRECTIONS,
-    ).cache()
+    ), caches)
     linked_orgs = (
         mentions.filter(F.col("label") == "OrganismTaxon")
         .select("conv_id", "mention_id", F.col("start").alias("org_start"))
@@ -954,11 +969,11 @@ def run_linker(
     )
 
     # --- gene hops: anchor then one taxon-keyed broadcast join ---
-    m_gene = _nearest_org_anchor(
+    m_gene = _cache(_nearest_org_anchor(
         m.filter(F.col("label") == "GeneOrGeneProduct").drop("label", "key_kind"),
         linked_orgs,
         side.known_taxa,
-    ).cache()
+    ), caches)
     gene_lex = side.gene_lex
     c_gene = m_gene.alias("g").join(
         F.broadcast(gene_lex).alias("l"),
@@ -985,7 +1000,7 @@ def run_linker(
     ).withColumn("grp", F.concat(F.lit("tax:"), F.col("tax_id")))
 
     tax_groups = {f"tax:{t}": [f"gene_{t}"] for t in emb_taxa}
-    emb = embedding_lookup(
+    emb = _cache(embedding_lookup(
         spark,
         m_flat.select("grp", "text_key").unionByName(m_gene_emb.select("grp", "text_key")),
         side.kb_matrices,
@@ -993,7 +1008,7 @@ def run_linker(
         encoder,
         cfg.similarity_threshold,
         dash_groups=set(tax_groups),
-    ).cache()  # tiny (distinct texts); reused by both hop joins below
+    ), caches)  # tiny (distinct texts); reused by both hop joins below
 
     c_emb_flat = m_flat.join(
         emb.filter(F.col("cand").isNotNull()), ["grp", "text_key"]
@@ -1022,11 +1037,12 @@ def run_linker(
         .unionByName(c_emb_gene)
     )
     if deep:
-        rest = _vote(combined, per_label=True).cache()
+        rest = _cache(_vote(combined, per_label=True), caches)
         c_var = _variant_candidates(
             mentions, c_dict, c_rs, rest, gene_symbols, litvar, llm,
             fewshot_examples=fewshot_examples, encoder=encoder,
             fewshot_k=cfg.fewshot_k, fewshot_threshold=cfg.fewshot_threshold,
+            caches=caches,
         )
         var_winners = _vote(c_var, per_label=True)
         all_winners = tax.unionByName(rest).unionByName(var_winners)

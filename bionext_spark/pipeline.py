@@ -82,14 +82,23 @@ class KGRun:
     llm: object = None
     fewshot_examples: DataFrame | None = None
     _graph: tuple[DataFrame, DataFrame] | None = field(default=None, init=False, repr=False)
+    # what the stage builds cached (run_linker's fan-out inputs), until
+    # run_chain releases them
+    caches: list[DataFrame] = field(default_factory=list, init=False, repr=False)
 
     def graph(self, out: dict[str, DataFrame]) -> tuple[DataFrame, DataFrame]:
         """(vertices, edges), shared by the two graph stages: one
         ``materialize_graph`` call per run, and none when both resume
-        (it runs the eager connected-components loop)."""
+        (connected components collect the alias edges eagerly)."""
         if self._graph is None:
             self._graph = materialize_graph(out["clean_links"], out["triples"])
         return self._graph
+
+    def release_caches(self) -> None:
+        """Unpersist ``caches``, newest first, so no cache is released
+        before one built over it."""
+        while self.caches:
+            self.caches.pop().unpersist()
 
 
 @dataclass(frozen=True)
@@ -126,6 +135,7 @@ def _links(run: KGRun, out: dict[str, DataFrame]) -> DataFrame:
         llm=run.llm,
         side=run.side if run.side is not None else fixtures.linker_side_data(run.spark),
         fewshot_examples=run.fewshot_examples,
+        caches=run.caches,
     )
 
 
@@ -190,6 +200,11 @@ def run_chain(
             out[s.name] = materialize(s.name, lambda df=seeds[s.name]: df, ())
         elif s.name in needed:
             out[s.name] = materialize(s.name, lambda s=s: s.build(run, out), s.inputs)
+        if s.name in CUTS:
+            # both materializers hold a cut stage's output (a commit or a
+            # localCheckpoint), and no later stage reads an uncut stage
+            # before it, so the caches built so far are read no more
+            run.release_caches()
     return out
 
 

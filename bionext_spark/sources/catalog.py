@@ -3,8 +3,11 @@
 The reference checkpoints by writing a BioC JSON file per stage and feeding
 its path to the next stage (src/tagger/__init__.py:140-144 etc.). Here each
 stage boundary is a **snapshotted table**: parquet data plus a JSON manifest
-recording the snapshot id, row count, per-partition row counts (lineage)
-and the input snapshot ids it was derived from.
+recording the snapshot id, row count, per-file row counts (lineage), the
+table schema and the input snapshot ids it was derived from. The counts come
+from the footers of the files just written and the schema from the written
+DataFrame, so a commit runs no Spark job beyond the write itself and a
+re-read runs none at all (no schema inference).
 
 This is the Iceberg-shaped behavior the north rule requires (snapshot ids
 as checkpoint tokens, per-partition lineage, idempotent resume) implemented
@@ -30,8 +33,10 @@ import time
 from dataclasses import dataclass
 from typing import Callable
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -76,9 +81,30 @@ class Manifest:
     # "iceberg" only): resume must not re-derive it from the current
     # session's catalog config.
     iceberg_ident: str | None = None
+    # ``StructType.json()`` of the committed table (parquet backend), so a
+    # re-read needs no schema inference; None in manifests written before
+    # the field existed, which re-read by inference.
+    schema: str | None = None
 
     def to_json(self) -> str:
         return json.dumps(self.__dict__, indent=2, sort_keys=True)
+
+
+def _footer_counts(data_dir: str) -> dict[str, int]:
+    """Rows per written part file (by file name) from the parquet footers.
+
+    Per written FILE, a stable property of the snapshot, not per
+    ``spark_partition_id()`` of a re-read, which follows the reader's split
+    planning. Files with no rows are left out, as a count grouped by
+    ``input_file_name()`` leaves them out."""
+    counts: dict[str, int] = {}
+    for d, _, files in os.walk(data_dir):
+        for name in files:
+            if name.endswith(".parquet") and not name.startswith((".", "_")):
+                rows = pq.read_metadata(os.path.join(d, name)).num_rows
+                if rows:
+                    counts[name] = counts.get(name, 0) + rows
+    return counts
 
 
 class StageCatalog:
@@ -136,10 +162,10 @@ class StageCatalog:
         committed under parquet must re-read as parquet even if this
         session auto-detected an Iceberg catalog, and an Iceberg commit
         must resume from its recorded table identifier."""
-        backend, ident = ("iceberg" if self.use_iceberg else "parquet"), None
+        backend, ident, schema = ("iceberg" if self.use_iceberg else "parquet"), None, None
         if self.is_committed(stage, snapshot_id):
             m = self.read_manifest(stage, snapshot_id)
-            backend, ident = m.backend, m.iceberg_ident
+            backend, ident, schema = m.backend, m.iceberg_ident, m.schema
             # manifests written before the backend field existed default to
             # "parquet" on deserialize, but an Iceberg commit is
             # unambiguous from its snapshot id — never route it to a
@@ -148,7 +174,10 @@ class StageCatalog:
                 backend = "iceberg"
         if backend == "iceberg":
             return self.spark.read.table(ident or self._iceberg_ident(stage, snapshot_id))
-        return self.spark.read.parquet(os.path.join(self._stage_dir(stage, snapshot_id), "data"))
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(StructType.fromJson(json.loads(schema)))
+        return reader.parquet(os.path.join(self._stage_dir(stage, snapshot_id), "data"))
 
     def read_manifest(self, stage: str, snapshot_id: str) -> Manifest:
         with open(self._manifest_path(stage, snapshot_id)) as f:
@@ -176,28 +205,17 @@ class StageCatalog:
             writer = writer.partitionBy(partition_by)
         writer.parquet(data_dir)
 
-        written = self.spark.read.parquet(data_dir)
-        # per-partition lineage/metrics (A5 analog: the reference prints
-        # per-stage counts; we persist them per written FILE — a stable
-        # property of the snapshot — not spark_partition_id() of a re-read,
-        # which reflects the reader's split planning and changes with
-        # maxPartitionBytes/file packing)
-        pc_rows = (
-            written.groupBy(
-                F.element_at(F.split(F.input_file_name(), "/"), -1).alias("file")
-            )
-            .count()
-            .collect()
-        )
+        counts = _footer_counts(data_dir)
         manifest = Manifest(
             stage=stage,
             snapshot_id=snap,
-            row_count=sum(r["count"] for r in pc_rows),
-            partition_counts={str(r["file"]): r["count"] for r in pc_rows},
+            row_count=sum(counts.values()),
+            partition_counts=counts,
             inputs=inputs,
             config_fingerprint=config_fingerprint,
             committed_at=time.time(),
             backend="parquet",
+            schema=df.schema.json(),
         )
         with open(os.path.join(tmp_dir, "_manifest.json"), "w") as f:
             f.write(manifest.to_json())

@@ -2,7 +2,23 @@
 
 from __future__ import annotations
 
-from bionext_spark.operators.canonicalize import alias_edges, connected_components, materialize_graph
+from bionext_spark.operators.canonicalize import (
+    _hash_to_min,
+    alias_edges,
+    connected_components,
+    materialize_graph,
+)
+
+# Test graphs fit MAX_DRIVER_ROWS, so connected_components resolves them by
+# union-find in the driver; larger edge sets run the hash-to-min loop.
+PATHS = {
+    "driver": connected_components,
+    "distributed": lambda verts, edges: _hash_to_min(verts, edges, 20),
+}
+
+
+def _components(verts, edges, path):
+    return {r["vertex_id"]: r["component"] for r in PATHS[path](verts, edges).collect()}
 
 
 def test_connected_components_chain(spark):
@@ -66,12 +82,14 @@ def test_long_chain_converges_within_default_rounds(spark):
     the pre-jump one-hop form needed one round per hop and silently
     returned WRONG components here."""
     n = 200
-    verts = spark.createDataFrame([(f"v{i:03d}",) for i in range(n)], "vertex_id string")
-    edges = spark.createDataFrame(
-        [(f"v{i:03d}", f"v{i + 1:03d}") for i in range(n - 1)], "a string, b string"
-    )
-    cc = {r["vertex_id"]: r["component"] for r in connected_components(verts, edges).collect()}
-    assert cc == {f"v{i:03d}": "v000" for i in range(n)}
+    vertices = [f"v{i:03d}" for i in range(n)]
+    chain = list(zip(vertices, vertices[1:]))
+    verts = spark.createDataFrame([(v,) for v in vertices], "vertex_id string")
+    edges = spark.createDataFrame(chain, "a string, b string")
+    for path in PATHS:
+        cc = _components(verts, edges, path)
+        assert cc == {v: "v000" for v in vertices}, path
+        assert cc == _union_find_reference(vertices, chain), path
 
 
 def test_random_graphs_match_union_find(spark):
@@ -89,8 +107,19 @@ def test_random_graphs_match_union_find(spark):
         ]
         verts_df = spark.createDataFrame([(v,) for v in vertices], "vertex_id string")
         edges_df = spark.createDataFrame(edges, "a string, b string")
-        got = {
-            r["vertex_id"]: r["component"]
-            for r in connected_components(verts_df, edges_df).collect()
-        }
-        assert got == _union_find_reference(vertices, edges), f"seed {seed}"
+        for path in PATHS:
+            got = _components(verts_df, edges_df, path)
+            assert got == _union_find_reference(vertices, edges), f"seed {seed}, {path}"
+
+
+def test_edges_outside_vertices_are_ignored_on_both_paths(spark):
+    """An edge whose endpoint is not a vertex joins nothing: "x" would
+    otherwise bridge b and c."""
+    vertices = ["a", "b", "c", "d"]
+    kept = [("a", "b"), ("c", "d")]
+    verts = spark.createDataFrame([(v,) for v in vertices], "vertex_id string")
+    edges = spark.createDataFrame(kept + [("b", "x"), ("x", "c")], "a string, b string")
+    expected = _union_find_reference(vertices, kept)
+    assert expected == {"a": "a", "b": "a", "c": "c", "d": "c"}
+    for path in PATHS:
+        assert _components(verts, edges, path) == expected, path

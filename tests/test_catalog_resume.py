@@ -161,3 +161,64 @@ def test_minhash_durable_barrier_resume(spark, tmp_path):
     dedup_minhash_lsh_durable(spark, sf, cat, "v2").collect()
     snap2 = StageCatalog.snapshot_id("minhash_digests", [f"documents:{sf}"], "v2")
     assert snap2 != snap and cat.is_committed("minhash_digests", snap2)
+
+
+def test_footer_counts_match_input_file_counts(spark, tmp_path):
+    """The manifest's per-file counts come from the parquet footers; they
+    equal a count grouped by input file over the committed data, which
+    leaves out files with no rows."""
+    cat = StageCatalog(spark, str(tmp_path))
+    # 6 partitions, two of them empty after the filter
+    df = spark.range(0, 600, numPartitions=6).filter((F.col("id") < 200) | (F.col("id") >= 400))
+    out, m = cat.write("stage_a", df, inputs=["input"])
+    by_file = {
+        r["file"]: r["count"]
+        for r in out.groupBy(F.element_at(F.split(F.input_file_name(), "/"), -1).alias("file"))
+        .count()
+        .collect()
+    }
+    assert len(by_file) == 4
+    assert m.partition_counts == by_file
+    assert m.row_count == 400
+
+
+def test_resumed_read_has_commit_schema_and_runs_no_job(spark, tmp_path):
+    """A commit records the table schema, so a re-read plans with it and
+    starts no Spark job; schema inference over the same files would."""
+    cat = StageCatalog(spark, str(tmp_path))
+    df = spark.createDataFrame(
+        [("c1", 1, [1.5], None)], "conv_id string not null, n int, xs array<double>, ts timestamp"
+    )
+    fresh, m = cat.write("s", df, inputs=["in"])
+    data_dir = f"{cat._stage_dir('s', m.snapshot_id)}/data"
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("catalog-read-probe", "catalog read probe")
+        resumed = cat.read("s", m.snapshot_id)
+        schema, columns = resumed.schema, resumed.columns
+        assert not sc.statusTracker().getJobIdsForGroup("catalog-read-probe")
+        inferred = spark.read.parquet(data_dir).schema
+        assert sc.statusTracker().getJobIdsForGroup("catalog-read-probe")  # the probe sees jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert schema == fresh.schema == inferred
+    assert columns == df.columns
+    assert [tuple(r) for r in resumed.collect()] == [tuple(r) for r in df.collect()]
+
+
+def test_manifest_without_schema_still_resumes(spark, tmp_path):
+    """Manifests written before the schema field existed re-read by
+    inference."""
+    import json
+
+    cat = StageCatalog(spark, str(tmp_path))
+    fresh, m = cat.run_stage("s", lambda: spark.range(5).toDF("id"), ["in"], "fp")
+    path = cat._manifest_path("s", m.snapshot_id)
+    raw = json.load(open(path))
+    raw.pop("schema")
+    json.dump(raw, open(path, "w"))
+
+    df, m2 = cat.run_stage("s", lambda: (_ for _ in ()).throw(AssertionError("recompute")), ["in"], "fp")
+    assert m2.schema is None and m2.row_count == 5
+    assert df.schema == fresh.schema
+    assert sorted(r["id"] for r in df.collect()) == list(range(5))

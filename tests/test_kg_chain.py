@@ -103,6 +103,18 @@ def test_checkpoint_cuts_materializes_exactly_the_cut_set():
     assert cut == ["conversations", "mentions", "clean_links"]
 
 
+def test_no_stage_after_a_cut_reads_an_uncut_stage_before_it():
+    """run_chain releases the caches built so far after each cut stage,
+    which is sound only while this holds."""
+    names = [s.name for s in P.CHAIN]
+    for i, cut in enumerate(names):
+        if cut not in P.CUTS:
+            continue
+        before = set(names[:i]) - P.CUTS
+        for s in P.CHAIN[i + 1 :]:
+            assert not before & set(s.inputs), (cut, s.name)
+
+
 @pytest.fixture(scope="module")
 def flagship_triples(spark):
     from bionext_spark.flagship import run_kg_pipeline
@@ -135,3 +147,33 @@ def test_catalog_chain_commits_the_in_memory_triples(spark, flagship_triples, tm
     got = sorted(tuple(r) for r in result.triples.select(*TRIPLE_COLS).collect())
     assert got == flagship_triples
     assert set(result.manifests) == set(PINNED_SNAPSHOTS)
+
+
+def test_no_entities_commits_empty_stages(spark, tmp_path):
+    """Transcripts with no planted mention: every stage commits, and each
+    one after ``conversations`` is empty, with no row-bearing files."""
+    import random
+
+    from bionext_spark import synth
+    from bionext_spark.sources import fixtures
+    from bionext_spark.sources.fixtures import transcripts_df
+
+    rng = random.Random(3)
+    rows = [
+        {**r, "text": synth._make_turn(rng, [])}
+        for r in synth.generate_transcripts(n_conversations=4, skew_conversation_turns=5)
+    ]
+    transcripts = transcripts_df(spark, rows)
+    fixtures.linker_side_data(spark)  # session-memoized, cached on first use
+    persistent = spark.sparkContext._jsc.getPersistentRDDs().size()
+    result = P.run(spark, transcripts, str(tmp_path))
+    # run_linker's caches are released once links is committed
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persistent
+    assert list(result.manifests) == list(PINNED_SNAPSHOTS)
+    assert result.manifests["conversations"].row_count > 0
+    for stage, m in result.manifests.items():
+        if stage != "conversations":
+            assert (m.row_count, m.partition_counts) == (0, {}), stage
+    catalog = StageCatalog(spark, str(tmp_path))
+    for stage in ("triples", "vertices", "edges"):
+        assert catalog.read(stage, result.manifests[stage].snapshot_id).count() == 0, stage
