@@ -9,7 +9,8 @@ rewritten to canonical ids.
 Connected components pick component = min vertex id. When the alias edges
 fit ``MAX_DRIVER_ROWS`` (the operators' shared driver-collect bound) they
 are collected once and resolved by union-find in the driver, and the vertex
-→ component mapping joins back as a broadcast local relation. The loop
+→ component mapping joins back as a broadcast ``LocalRelation`` (built
+from pandas, so the broadcast runs no Python worker). The loop
 below pays a ``localCheckpoint`` and a changed-row ``count()`` per round,
 ~30 Spark jobs on a few dozen rows. The bound limits driver memory; it is
 not a speed crossover. On 4 CPUs, on synthetic graphs of 2-9-vertex trees,
@@ -23,6 +24,7 @@ It is the only iterative operator in the engine.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
@@ -61,9 +63,13 @@ def connected_components(vertices: DataFrame, edges: DataFrame, max_iter: int = 
     rows = kept.limit(MAX_DRIVER_ROWS + 1).collect()
     if len(rows) > MAX_DRIVER_ROWS:
         return _hash_to_min(vertices, edges, max_iter)
+    if not rows:
+        return ids.select("vertex_id", F.col("vertex_id").alias("component"))
+    # a pandas-built frame is a LocalRelation, which broadcasts from the
+    # driver; a list-built one is an RDD scanned by a Python worker
     id_type = vertices.schema["vertex_id"].dataType
     mapping = vertices.sparkSession.createDataFrame(
-        list(_min_components(rows).items()),
+        pd.DataFrame(list(_min_components(rows).items()), columns=["vertex_id", "component"]),
         StructType([StructField("vertex_id", id_type), StructField("component", id_type)]),
     )
     return ids.join(F.broadcast(mapping), "vertex_id", "left").select(
@@ -138,18 +144,25 @@ def _hash_to_min(vertices: DataFrame, edges: DataFrame, max_iter: int) -> DataFr
     return cc
 
 
-def materialize_graph(clean_links: DataFrame, triples: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """→ (vertices, edges) per schemas.VERTICES / schemas.EDGES."""
+def graph_vertices(clean_links: DataFrame) -> DataFrame:
+    """→ vertices per schemas.VERTICES: one row per linked id, with its
+    alias component as ``canonical_id``."""
     verts = (
         clean_links.groupBy(F.col("linked_id").alias("vertex_id"))
         .agg(F.min("label").alias("label"), F.count("*").alias("n_mentions"))
     )
     cc = connected_components(verts.select("vertex_id"), alias_edges(clean_links))
-    vertices = verts.join(cc, "vertex_id").select(
+    return verts.join(cc, "vertex_id").select(
         "vertex_id", F.col("component").alias("canonical_id"), "label", "n_mentions"
     )
+
+
+def graph_edges(vertices: DataFrame, triples: DataFrame) -> DataFrame:
+    """→ edges per schemas.EDGES: triples rewritten to the canonical ids
+    of ``vertices`` (``graph_vertices``' output; the pipeline passes the
+    committed table, so the components are not computed again)."""
     canon = vertices.select("vertex_id", "canonical_id")
-    edges = (
+    return (
         triples.join(canon.withColumnRenamed("vertex_id", "subj"), "subj", "left")
         .withColumn("src", F.coalesce("canonical_id", F.col("subj")))
         .drop("canonical_id")
@@ -158,4 +171,3 @@ def materialize_graph(clean_links: DataFrame, triples: DataFrame) -> tuple[DataF
         .groupBy("src", "dst", "pred", "novel")
         .agg(F.countDistinct("conv_id").alias("n_conversations"))
     )
-    return vertices, edges

@@ -4,10 +4,11 @@ The reference declares its pipeline once, as ``[Tagger, Linker,
 Extractor]``, and folds one input through it (main.py:85-100, 115-116).
 Here ``CHAIN`` is that declaration: eight named stages, transcripts →
 conversations → mentions → links → clean_links → pairs → triples →
-vertices/edges. Each stage names the stages whose snapshot ids key it and
-builds its DataFrame from the outputs already produced. ``run_chain``
-folds the list through a materializer ``(stage, build, inputs) ->
-DataFrame``, which decides only how each stage's output is held:
+vertices/edges. Each stage names the stages whose snapshot ids key it (and
+any other stage it reads) and builds its DataFrame from the outputs
+already produced. ``run_chain`` folds the list through a materializer
+``(stage, build, inputs) -> DataFrame``, which decides only how each
+stage's output is held:
 
 * ``CatalogMaterializer`` commits every stage as a snapshotted table
   through ``StageCatalog.run_stage``, so any stage resumes idempotently
@@ -48,7 +49,7 @@ from bionext_spark.adapters import (
 )
 from bionext_spark.config import DEFAULT_CONFIG, PipelineConfig
 from bionext_spark.operators.assemble import assemble_conversations
-from bionext_spark.operators.canonicalize import materialize_graph
+from bionext_spark.operators.canonicalize import graph_edges, graph_vertices
 from bionext_spark.operators.extraction import (
     aggregate_triples,
     classify_pair_spans,
@@ -81,18 +82,9 @@ class KGRun:
     litvar: object = None
     llm: object = None
     fewshot_examples: DataFrame | None = None
-    _graph: tuple[DataFrame, DataFrame] | None = field(default=None, init=False, repr=False)
     # what the stage builds cached (run_linker's fan-out inputs), until
     # run_chain releases them
     caches: list[DataFrame] = field(default_factory=list, init=False, repr=False)
-
-    def graph(self, out: dict[str, DataFrame]) -> tuple[DataFrame, DataFrame]:
-        """(vertices, edges), shared by the two graph stages: one
-        ``materialize_graph`` call per run, and none when both resume
-        (connected components collect the alias edges eagerly)."""
-        if self._graph is None:
-            self._graph = materialize_graph(out["clean_links"], out["triples"])
-        return self._graph
 
     def release_caches(self) -> None:
         """Unpersist ``caches``, newest first, so no cache is released
@@ -107,6 +99,9 @@ class Stage:
     # The stages (or SOURCE) whose snapshot ids key this one's snapshot.
     inputs: tuple[str, ...]
     build: Callable[[KGRun, dict[str, DataFrame]], DataFrame]
+    # Stages the build also reads that do not key its snapshot, because
+    # their outputs are functions of ``inputs``; run_chain produces them.
+    reads: tuple[str, ...] = ()
 
 
 def _conversations(run: KGRun, out: dict[str, DataFrame]) -> DataFrame:
@@ -163,10 +158,19 @@ CHAIN: tuple[Stage, ...] = (
     Stage("links", ("mentions",), _links),
     Stage("clean_links", ("links",), lambda run, out: run_cleaner(out["links"])),
     Stage("pairs", ("clean_links", "conversations"), _pairs),
-    # also reads clean_links, already in its lineage through pairs
-    Stage("triples", ("pairs", "conversations"), _triples),
-    Stage("vertices", ("clean_links", "triples"), lambda run, out: run.graph(out)[0]),
-    Stage("edges", ("clean_links", "triples"), lambda run, out: run.graph(out)[1]),
+    # clean_links is in its lineage through pairs, so it does not key it
+    Stage("triples", ("pairs", "conversations"), _triples, reads=("clean_links",)),
+    # vertices reads only clean_links; both graph stages keep the
+    # (clean_links, triples) key their snapshot ids were first pinned with
+    Stage("vertices", ("clean_links", "triples"), lambda run, out: graph_vertices(out["clean_links"])),
+    # from the materialized vertices (the committed table under
+    # CatalogMaterializer), so its write computes no components again
+    Stage(
+        "edges",
+        ("clean_links", "triples"),
+        lambda run, out: graph_edges(out["vertices"], out["triples"]),
+        reads=("vertices",),
+    ),
 )
 
 Materializer = Callable[[str, Callable[[], DataFrame], tuple[str, ...]], DataFrame]
@@ -193,7 +197,7 @@ def run_chain(
     needed = {s.name for s in stages[last_seed + 1 :]}
     for s in reversed(stages):
         if s.name in needed and s.name not in seeds:
-            needed.update(s.inputs)
+            needed.update(s.inputs, s.reads)
     out = {SOURCE: transcripts}
     for s in stages:
         if s.name in seeds and s.name in needed:

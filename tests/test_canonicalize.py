@@ -6,7 +6,8 @@ from bionext_spark.operators.canonicalize import (
     _hash_to_min,
     alias_edges,
     connected_components,
-    materialize_graph,
+    graph_edges,
+    graph_vertices,
 )
 
 # Test graphs fit MAX_DRIVER_ROWS, so connected_components resolves them by
@@ -47,7 +48,8 @@ def test_alias_edges_and_graph(spark):
         [("c1", "7157-alt", "Association", "D001241", False)],
         "conv_id string, subj string, pred string, obj string, novel boolean",
     )
-    vertices, out_edges = materialize_graph(links, triples)
+    vertices = graph_vertices(links)
+    out_edges = graph_edges(vertices, triples)
     v = {r["vertex_id"]: r["canonical_id"] for r in vertices.collect()}
     assert v["7157"] == "7157" and v["7157-alt"] == "7157"
     e = out_edges.collect()
@@ -123,3 +125,28 @@ def test_edges_outside_vertices_are_ignored_on_both_paths(spark):
     assert expected == {"a": "a", "b": "a", "c": "c", "d": "c"}
     for path in PATHS:
         assert _components(verts, edges, path) == expected, path
+
+
+def _leaves(df) -> list[str]:
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    return [leaves.apply(i).nodeName() for i in range(leaves.size())]
+
+
+def test_driver_mapping_is_a_local_relation_of_the_id_type(spark):
+    """The vertex → component mapping broadcasts from a LocalRelation (no
+    Python worker scan) and keeps the vertex id's type."""
+    for id_type, (b, a, c, d) in (("string", "bacd"), ("bigint", (20, 10, 30, 40)), ("int", (2, 1, 3, 4))):
+        verts = spark.createDataFrame([(b,), (a,), (c,), (d,)], f"vertex_id {id_type}")
+        edges = spark.createDataFrame([(b, a), (c, a)], f"a {id_type}, b {id_type}")
+        cc = connected_components(verts, edges)
+        assert _leaves(cc) == ["LogicalRDD", "LocalRelation"], id_type
+        assert cc.schema["component"].dataType == verts.schema["vertex_id"].dataType, id_type
+        assert _components(verts, edges, "driver") == {a: a, b: a, c: a, d: d}, id_type
+
+
+def test_no_edges_maps_each_vertex_to_itself(spark):
+    verts = spark.createDataFrame([("a",), ("b",)], "vertex_id string")
+    edges = spark.createDataFrame([], "a string, b string")
+    cc = connected_components(verts, edges)
+    assert _leaves(cc) == ["LogicalRDD"]
+    assert _components(verts, edges, "driver") == {"a": "a", "b": "b"}

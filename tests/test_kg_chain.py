@@ -2,11 +2,14 @@
 
 Spark-free: the fold's order, seeds and resume keys. With Spark: the
 in-memory chain (flagship.run_kg_pipeline) equals the pure-Python oracle,
-and the catalog chain (pipeline.run) commits the same triples.
+and the catalog chain (pipeline.run) commits the same triples, resumes a
+lost edges stage from the committed vertices, and, run again, compiles
+almost no generated class.
 """
 
 from __future__ import annotations
 
+import os
 from types import SimpleNamespace
 
 import pytest
@@ -73,18 +76,24 @@ def test_seeds_replace_their_stages_and_prune_what_only_feeds_them():
     ]
     assert "links" not in out and "vertices" not in out
 
+    # triples also reads clean_links, so seeding pairs does not prune it
+    calls.clear()
+    P.run_chain(_run_without_spark(), None, record, until="triples", seeds={"pairs": seed})
+    assert [stage for stage, _ in calls] == [s.name for s in P.CHAIN[:6]]
 
-def test_graph_stages_share_one_materialize_graph_call(monkeypatch):
-    calls = []
-    monkeypatch.setattr(
-        P, "materialize_graph", lambda clean, triples: calls.append((clean, triples)) or ("V", "E")
-    )
+
+def test_edges_are_built_from_the_materialized_vertices(monkeypatch):
+    """edges reads the vertices stage's materialized output (the committed
+    table under CatalogMaterializer), and seeding clean_links + triples
+    still yields both graph stages."""
+    monkeypatch.setattr(P, "graph_vertices", lambda clean: ("vertices of", clean))
+    monkeypatch.setattr(P, "graph_edges", lambda vertices, triples: ("edges of", vertices, triples))
     out = P.run_chain(
-        _run_without_spark(), None, lambda stage, build, inputs: build(),
+        _run_without_spark(), None, lambda stage, build, inputs: ("held", build()),
         seeds={"clean_links": "C", "triples": "T"},
     )
-    assert (out["vertices"], out["edges"]) == ("V", "E")
-    assert calls == [("C", "T")]
+    assert out["vertices"] == ("held", ("vertices of", ("held", "C")))
+    assert out["edges"] == ("held", ("edges of", out["vertices"], ("held", "T")))
 
 
 def test_checkpoint_cuts_materializes_exactly_the_cut_set():
@@ -112,7 +121,7 @@ def test_no_stage_after_a_cut_reads_an_uncut_stage_before_it():
             continue
         before = set(names[:i]) - P.CUTS
         for s in P.CHAIN[i + 1 :]:
-            assert not before & set(s.inputs), (cut, s.name)
+            assert not before & set(s.inputs + s.reads), (cut, s.name)
 
 
 @pytest.fixture(scope="module")
@@ -140,13 +149,53 @@ def test_in_memory_chain_matches_oracle(spark, flagship_triples):
     assert flagship_triples == expected
 
 
-def test_catalog_chain_commits_the_in_memory_triples(spark, flagship_triples, tmp_path):
+@pytest.fixture(scope="module")
+def committed(spark, tmp_path_factory):
+    """(transcripts, checkpoint dir, result) of one pipeline.run at SF."""
     from bionext_spark.flagship import derive_transcripts
 
-    result = P.run(spark, derive_transcripts(spark, SF), str(tmp_path))
+    transcripts = derive_transcripts(spark, SF)
+    path = str(tmp_path_factory.mktemp("kg"))
+    return transcripts, path, P.run(spark, transcripts, path)
+
+
+def test_catalog_chain_commits_the_in_memory_triples(flagship_triples, committed):
+    result = committed[2]
     got = sorted(tuple(r) for r in result.triples.select(*TRIPLE_COLS).collect())
     assert got == flagship_triples
     assert set(result.manifests) == set(PINNED_SNAPSHOTS)
+
+
+def test_warm_run_compiles_almost_no_generated_class(spark, committed, tmp_path):
+    """A second run of the same input reuses the generated classes of the
+    first: the codegen cache holds a whole run's (~285 classes), where the
+    default 100 entries made every run compile them all again."""
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    before = compiles.getCount()
+    P.run(spark, committed[0], str(tmp_path))
+    assert compiles.getCount() - before <= 10
+
+
+def test_resume_after_a_kill_during_edges(spark, committed, monkeypatch):
+    """With only edges lost, the rerun rebuilds it from the committed
+    vertices: same snapshot id and rows, and no connected components."""
+    import shutil
+
+    from bionext_spark.operators import canonicalize
+
+    _, path, result = committed
+    snapshot = result.manifests["edges"].snapshot_id
+    catalog = StageCatalog(spark, path)
+    rows = sorted(tuple(r) for r in catalog.read("edges", snapshot).collect())
+    shutil.rmtree(os.path.join(path, "edges"))
+
+    def killed(*args):
+        raise AssertionError("connected components ran again")
+
+    monkeypatch.setattr(canonicalize, "connected_components", killed)
+    resumed = P.run(spark, committed[0], path)
+    assert resumed.manifests["edges"].snapshot_id == snapshot
+    assert sorted(tuple(r) for r in catalog.read("edges", snapshot).collect()) == rows
 
 
 def test_no_entities_commits_empty_stages(spark, tmp_path):
