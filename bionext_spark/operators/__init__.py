@@ -2,7 +2,8 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType, StructType
 
 # Runtime knob for the round-robin width ahead of CPU-bound kernel stages.
 # On a cluster, set at submit time (spark-submit --conf) to executors ×
@@ -14,6 +15,26 @@ KERNEL_PARALLELISM_CONF = "spark.bionext.kernel.parallelism"
 # Largest side input an operator collects to the driver (lexicons, few-shot
 # examples, alias edges); a larger one takes the operator's distributed path.
 MAX_DRIVER_ROWS = 2_000_000
+
+
+def local_relation(spark: SparkSession, rows: list, schema: StructType | str) -> DataFrame:
+    """Driver-side rows → a DataFrame over a ``LocalRelation``.
+
+    The rows reach the JVM as one Arrow table, so the plan holds them: the
+    frame broadcasts from the driver, and building or scanning it starts
+    no Spark job and no Python worker. A frame built from a list is a
+    ``LogicalRDD`` that a Python worker scans at every use, and so is one
+    built from an empty pandas frame (``createDataFrame`` takes its Arrow
+    path only for a non-empty one). ``rows`` are tuples in ``schema``'s
+    field order or mappings keyed by field name. Keep them small: every
+    plan that reads the frame carries them."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    records = [r if isinstance(r, dict) else dict(zip(schema.names, r)) for r in rows]
+    return spark.createDataFrame(pa.Table.from_pylist(records, to_arrow_schema(schema)), schema)
 
 
 def kernel_repartition(df: DataFrame) -> DataFrame:

@@ -9,9 +9,9 @@ rewritten to canonical ids.
 Connected components pick component = min vertex id. When the alias edges
 fit ``MAX_DRIVER_ROWS`` (the operators' shared driver-collect bound) they
 are collected once and resolved by union-find in the driver, and the vertex
-→ component mapping joins back as a broadcast ``LocalRelation`` (built
-from pandas, so the broadcast runs no Python worker). The loop
-below pays a ``localCheckpoint`` and a changed-row ``count()`` per round,
+→ component mapping joins back as a broadcast ``LocalRelation``
+(``operators.local_relation``: the broadcast runs no Python worker). The
+loop below pays a ``localCheckpoint`` and a changed-row ``count()`` per round,
 ~30 Spark jobs on a few dozen rows. The bound limits driver memory; it is
 not a speed crossover. On 4 CPUs, on synthetic graphs of 2-9-vertex trees,
 the driver path took 0.5 / 2.3 / 6.3 / 18 / 44 s at 1k / 100k / 300k / 1M
@@ -24,12 +24,11 @@ It is the only iterative operator in the engine.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
-from bionext_spark.operators import MAX_DRIVER_ROWS
+from bionext_spark.operators import MAX_DRIVER_ROWS, local_relation
 
 
 def alias_edges(links: DataFrame) -> DataFrame:
@@ -65,11 +64,10 @@ def connected_components(vertices: DataFrame, edges: DataFrame, max_iter: int = 
         return _hash_to_min(vertices, edges, max_iter)
     if not rows:
         return ids.select("vertex_id", F.col("vertex_id").alias("component"))
-    # a pandas-built frame is a LocalRelation, which broadcasts from the
-    # driver; a list-built one is an RDD scanned by a Python worker
     id_type = vertices.schema["vertex_id"].dataType
-    mapping = vertices.sparkSession.createDataFrame(
-        pd.DataFrame(list(_min_components(rows).items()), columns=["vertex_id", "component"]),
+    mapping = local_relation(
+        vertices.sparkSession,
+        list(_min_components(rows).items()),
         StructType([StructField("vertex_id", id_type), StructField("component", id_type)]),
     )
     return ids.join(F.broadcast(mapping), "vertex_id", "left").select(

@@ -42,7 +42,7 @@ from bionext_spark.config import (
     TAXONOMY_ID_CORRECTIONS,
     PipelineConfig,
 )
-from bionext_spark.operators import MAX_DRIVER_ROWS
+from bionext_spark.operators import MAX_DRIVER_ROWS, local_relation
 
 CAND_COLS = ("conv_id", "mention_id", "cand", "rank", "priority")
 
@@ -185,13 +185,13 @@ def majority_vote(
 #
 # The lexicons are side data by contract (MBs — the reference loads them
 # as in-process dicts + .npy matrices, src/linker/utils.py): the scale
-# axis is the transcript corpus, never the lexicons. Round-2 profiling
-# showed the per-run cost of deriving these structures relationally —
-# two driver collects plus five separate broadcast-build subplans, each
-# its own scheduler job — was a fixed serial latency that bounded local
-# N→4N scaling. LinkerSideData materializes the inputs ONCE (driver-side
-# python when they fit, the relational builders as fallback) and is
-# session-memoizable, so a long-running job pays the cost once.
+# axis is the transcript corpus, never the lexicons. LinkerSideData derives
+# them ONCE per session, in the driver, from plain rows (``from_rows``),
+# and holds the four broadcast tables as ``LocalRelation``s
+# (``operators.local_relation``): deriving and broadcasting them starts no
+# Spark job, no Python worker and no cache. Derived per run and
+# relationally, they were a serial constant that bounded local N→4N
+# scaling (round 2); inputs past ``max_driver_rows`` keep those plans.
 # ---------------------------------------------------------------------------
 
 
@@ -199,25 +199,44 @@ DICT_LEX_SCHEMA = "label string, key_kind string, text_key string, cand string, 
 GENE_LEX_SCHEMA = "tax_id string, text_key string, cand string, rank long, priority int"
 
 
+def _kb_matrices(concepts) -> dict[str, tuple[list[str], np.ndarray]]:
+    """Concept rows → {kb: (ids, embedding matrix)} in rank order. The
+    embeddings are rounded to their declared float type
+    (``schemas.LEXICON_CONCEPTS``), so rows read from a frame and rows
+    handed over directly give the same matrices."""
+    emb_rows = sorted((r for r in concepts if r["embedding"] is not None), key=lambda r: r["rank"])
+    out = {}
+    for kb in sorted({r["kb"] for r in emb_rows}):
+        sub = [r for r in emb_rows if r["kb"] == kb]
+        out[kb] = (
+            [r["id"] for r in sub],
+            np.array([r["embedding"] for r in sub], dtype=np.float32).astype(np.float64),
+        )
+    return out
+
+
 class LinkerSideData:
-    """All lexicon-derived side structures, materialized once.
+    """All lexicon-derived side structures, derived once per session.
 
     ``dict_lex`` / ``gene_lex`` / ``flat_train_keys`` / ``gene_dict_keys``
-    are DataFrames over LOCAL rows (or the relational fallback plans when
-    an input exceeds ``max_driver_rows``) — broadcast-join sides with no
-    upstream lineage. ``known_taxa`` / ``emb_taxa`` are python lists;
+    are the broadcast-join sides: ``LocalRelation``s over driver-side rows,
+    or the relational fallback plans when an input exceeds
+    ``max_driver_rows``. ``known_taxa`` (the gene KB's taxa) and
+    ``emb_taxa`` (the taxa with a gene embedding file) are python lists;
     ``kb_matrices`` the numpy KB matrices (rank-ordered, unit-norm rows —
     reference pre-loads .npy, chemicals.py:59-62)."""
 
     def __init__(self, dict_lex, gene_lex, known_taxa, flat_train_keys,
-                 gene_dict_keys, emb_taxa, kb_matrices):
+                 gene_dict_keys, kb_matrices):
         self.dict_lex = dict_lex
         self.gene_lex = gene_lex
         self.known_taxa = known_taxa
         self.flat_train_keys = flat_train_keys
         self.gene_dict_keys = gene_dict_keys
-        self.emb_taxa = emb_taxa
         self.kb_matrices = kb_matrices
+        self.emb_taxa = sorted(
+            kb.removeprefix("gene_") for kb in kb_matrices if kb.startswith("gene_")
+        )
 
     @staticmethod
     def build(
@@ -228,21 +247,13 @@ class LinkerSideData:
         lexicon_variants: DataFrame,
         max_driver_rows: int = MAX_DRIVER_ROWS,
     ) -> "LinkerSideData":
+        """Side data over lexicon tables: collects each table that fits
+        ``max_driver_rows`` and derives from its rows (``from_rows``);
+        past the bound, the lexicon tables stay relational plans."""
         # concepts ALWAYS collect: the KB embedding matrices must fit the
         # driver regardless (they broadcast as numpy, like the reference's
         # .npy loads)
         co = lexicon_concepts.select("kb", "id", "text", "embedding", "rank").collect()
-        emb_rows = sorted((r for r in co if r["embedding"] is not None), key=lambda r: r["rank"])
-        kb_matrices: dict[str, tuple[list[str], np.ndarray]] = {}
-        for kb in sorted({r["kb"] for r in emb_rows}):
-            sub = [r for r in emb_rows if r["kb"] == kb]
-            kb_matrices[kb] = (
-                [r["id"] for r in sub],
-                np.array([r["embedding"] for r in sub], dtype=np.float64),
-            )
-        emb_taxa = sorted(
-            kb.removeprefix("gene_") for kb in kb_matrices if kb.startswith("gene_")
-        )
 
         def _try_collect(df: DataFrame):
             rows = df.limit(max_driver_rows + 1).collect()
@@ -251,50 +262,53 @@ class LinkerSideData:
         tr = _try_collect(train_direct)
         ge = _try_collect(lexicon_genes)
         va = _try_collect(lexicon_variants)
-        if tr is None or ge is None or va is None:  # pragma: no cover - huge lexicons
-            dict_lex = _dictionary_lexicon(train_direct, lexicon_concepts, lexicon_variants)
-            gene_lex = _gene_lexicon(train_direct, lexicon_genes)
-            known_taxa = sorted(
-                r[0] for r in lexicon_genes.select("tax_id").distinct().collect()
-            )
-            flat_train_keys = train_direct.filter(
-                F.col("label").isin(list(FLAT_EMB_KBS)) & F.col("tax_id").isNull()
-            ).select("label", "text_key").distinct()
-            gene_dict_keys = (
-                gene_lex.filter(F.col("priority") <= 1).select("tax_id", "text_key").distinct()
-            )
-            return LinkerSideData(
-                dict_lex, gene_lex, known_taxa, flat_train_keys, gene_dict_keys,
-                emb_taxa, kb_matrices,
-            )
+        if tr is not None and ge is not None and va is not None:
+            return LinkerSideData.from_rows(spark, tr, co, ge, va)
 
-        # --- pure-python derivation, exactly the relational semantics ---
+        gene_lex = _gene_lexicon(train_direct, lexicon_genes)
+        return LinkerSideData(
+            _dictionary_lexicon(train_direct, lexicon_concepts, lexicon_variants),
+            gene_lex,
+            sorted(r[0] for r in lexicon_genes.select("tax_id").distinct().collect()),
+            train_direct.filter(
+                F.col("label").isin(list(FLAT_EMB_KBS)) & F.col("tax_id").isNull()
+            ).select("label", "text_key").distinct(),
+            gene_lex.filter(F.col("priority") <= 1).select("tax_id", "text_key").distinct(),
+            _kb_matrices(co),
+        )
+
+    @staticmethod
+    def from_rows(spark: SparkSession, train_direct, concepts, genes, variants) -> "LinkerSideData":
+        """Side data from lexicon rows (mappings or ``Row``s with the
+        fixture tables' columns), derived in the driver with exactly the
+        relational semantics of ``_dictionary_lexicon`` / ``_gene_lexicon``.
+        Starts no Spark job."""
         dict_rows = [
             (
                 r["label"],
                 "raw" if r["label"] == "OrganismTaxon" else "lower",
                 r["text_key"], r["linked_id"], r["rank"], 0,
             )
-            for r in tr
+            for r in train_direct
             if r["tax_id"] is None
         ]
         dict_rows += [
             ("OrganismTaxon", "lower", r["text"], r["id"], r["rank"], 1)
-            for r in co
+            for r in concepts
             if r["kb"] == "taxonomy"
         ]
         dict_rows += [
-            ("SequenceVariant", "lower", r["mention"], r["identifier"], 0, 2) for r in va
+            ("SequenceVariant", "lower", r["mention"], r["identifier"], 0, 2) for r in variants
         ]
 
         gene_rows = [
             (r["tax_id"], r["text_key"], r["linked_id"], r["rank"], 0)
-            for r in tr
+            for r in train_direct
             if r["label"] == "GeneOrGeneProduct" and r["tax_id"] is not None
         ]
         kb_min: dict[tuple, int] = {}
         backup_min: dict[tuple, int] = {}
-        for r in ge:
+        for r in genes:
             k = (r["tax_id"], r["alias"], r["gene_id"])
             kb_min[k] = min(kb_min.get(k, r["rank"]), r["rank"])
             b = (r["alias"], r["gene_id"])
@@ -302,36 +316,21 @@ class LinkerSideData:
         gene_rows += [(t, a, g, rk, 1) for (t, a, g), rk in kb_min.items()]
         gene_rows += [(None, a, g, rk, 3) for (a, g), rk in backup_min.items()]
 
-        known_taxa = sorted({r["tax_id"] for r in ge})
         flat_keys = sorted(
             {
                 (r["label"], r["text_key"])
-                for r in tr
+                for r in train_direct
                 if r["label"] in FLAT_EMB_KBS and r["tax_id"] is None
             }
         )
         gd_keys = sorted({(t, a) for (t, a, _g, _rk, p) in gene_rows if p <= 1})
-
-        def local_df(rows, schema):
-            # cache + materialize NOW: a local-rows DataFrame is scanned by
-            # re-deserializing pickled python batches through a python
-            # worker; every broadcast build that references it would pay
-            # that (measured ~2.5s per build — a per-RUN serial constant,
-            # 6+ builds per pipeline run). One count() here pins the rows
-            # JVM-side for the session, so each later broadcast build is a
-            # sub-100ms cached-scan job.
-            df = spark.createDataFrame(rows, schema).coalesce(1).cache()
-            df.count()
-            return df
-
         return LinkerSideData(
-            local_df(dict_rows, DICT_LEX_SCHEMA),
-            local_df(gene_rows, GENE_LEX_SCHEMA),
-            known_taxa,
-            local_df(flat_keys, "label string, text_key string"),
-            local_df(gd_keys, "tax_id string, text_key string"),
-            emb_taxa,
-            kb_matrices,
+            local_relation(spark, dict_rows, DICT_LEX_SCHEMA),
+            local_relation(spark, gene_rows, GENE_LEX_SCHEMA),
+            sorted({r["tax_id"] for r in genes}),
+            local_relation(spark, flat_keys, "label string, text_key string"),
+            local_relation(spark, gd_keys, "tax_id string, text_key string"),
+            _kb_matrices(concepts),
         )
 
 

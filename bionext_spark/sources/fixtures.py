@@ -3,7 +3,8 @@
 The reference reads BioC JSON, JSONL KBs, .npy matrices, pickles and TSVs
 (SURVEY.md §2.1); our engine's canonical source is a columnar table per
 input. These builders create DataFrames from the deterministic synth rows
-with explicit schemas; ``write_fixture_tables`` materializes them as
+with explicit schemas (the side tables as driver-held ``LocalRelation``s,
+the transcripts as input data); ``write_fixture_tables`` materializes them as
 parquet so tests/bench exercise the real scan path (column pruning +
 predicate pushdown).
 """
@@ -16,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from bionext_spark import schemas, synth
+from bionext_spark.operators import local_relation
 
 # the declared stage-boundary schema IS the consumed shape (no drift)
 TRAIN_DIRECT_RANKED = schemas.TRAIN_DIRECT
@@ -49,33 +51,33 @@ def transcripts_df(spark: SparkSession, rows: list[dict] | None = None) -> DataF
 
 
 def lexicon_concepts_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(_with_rank(synth.lexicon_concepts_rows()), LEXICON_CONCEPTS_RANKED)
+    return local_relation(spark, _with_rank(synth.lexicon_concepts_rows()), LEXICON_CONCEPTS_RANKED)
 
 
 def lexicon_genes_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(_with_rank(synth.lexicon_genes_rows()), LEXICON_GENES_RANKED)
+    return local_relation(spark, _with_rank(synth.lexicon_genes_rows()), LEXICON_GENES_RANKED)
 
 
 def train_direct_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(synth.train_direct_rows(), TRAIN_DIRECT_RANKED)
+    return local_relation(spark, synth.train_direct_rows(), TRAIN_DIRECT_RANKED)
 
 
 def lexicon_variants_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(synth.lexicon_variants_rows(), LEXICON_VARIANTS)
+    return local_relation(spark, synth.lexicon_variants_rows(), LEXICON_VARIANTS)
 
 
 def gene_symbols_df(spark: SparkSession) -> DataFrame:
     """J8 — NCBI gene_lookup.json analog (gene_id → symbol), the broadcast
     side of the seq-variant LitVar/LLM hops (reference seq_variant.py:312)."""
-    return spark.createDataFrame(synth.gene_symbols_rows(), GENE_SYMBOLS)
+    return local_relation(spark, synth.gene_symbols_rows(), GENE_SYMBOLS)
 
 
 def variant_examples_df(spark: SparkSession) -> DataFrame:
     """K5 few-shot example memory (mention, code, gene) — the dataflow
     side table select_fewshot_examples retrieves from (reference
     seq_variant.py:324-341)."""
-    return spark.createDataFrame(
-        synth.variant_fewshot_rows(), "mention string, code string, gene string"
+    return local_relation(
+        spark, synth.variant_fewshot_rows(), "mention string, code string, gene string"
     )
 
 
@@ -83,24 +85,21 @@ _SIDE_CACHE: dict[str, object] = {}
 
 
 def linker_side_data(spark: SparkSession):
-    """Session-memoized LinkerSideData over the synth fixture lexicons.
-
-    The lexicons are deterministic module constants, so one materialization
-    per Spark application is exact; rebuilding them per pipeline run was a
-    measured serial-latency term in the N→4N scaling bench (round-2
-    BENCH/BASELINE.md stage-timeline: per-run lexicon builds + driver
-    collects in the ~40s constant)."""
+    """Session-memoized LinkerSideData over the synth fixture lexicons,
+    derived from the synth rows in the driver (no input frame, no Spark
+    job). The lexicons are deterministic module constants, so one
+    derivation per Spark application is exact."""
     from bionext_spark.operators.linking import LinkerSideData
 
     key = spark.sparkContext.applicationId
     side = _SIDE_CACHE.get(key)
     if side is None:
-        side = LinkerSideData.build(
+        side = LinkerSideData.from_rows(
             spark,
-            train_direct_df(spark),
-            lexicon_concepts_df(spark),
-            lexicon_genes_df(spark),
-            lexicon_variants_df(spark),
+            synth.train_direct_rows(),
+            _with_rank(synth.lexicon_concepts_rows()),
+            _with_rank(synth.lexicon_genes_rows()),
+            synth.lexicon_variants_rows(),
         )
         _SIDE_CACHE.clear()  # one live session at a time; drop stale apps
         _SIDE_CACHE[key] = side

@@ -4,6 +4,11 @@
 Usage:
   spark-submit --py-files bionext_spark.zip scripts/run_pipeline.py \
       --transcripts <parquet dir> --checkpoints <dir> [--synth]
+
+The session comes from ``session.get_spark``, the engine's one session
+conf. ``SHUFFLE_PARTITIONS`` in the environment sets the shuffle
+partitions (default: ``get_spark``'s); ``SPARK_GRAFT_ON_CLUSTER=1`` takes
+the master from spark-submit instead of ``local[SPARK_GRAFT_CPUS]``.
 """
 
 from __future__ import annotations
@@ -17,9 +22,8 @@ import sys
 # (Under spark-submit --py-files the zip is already on the path.)
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
-
 from bionext_spark import pipeline, schemas
+from bionext_spark.session import get_spark
 from bionext_spark.sources.fixtures import transcripts_df
 
 
@@ -30,8 +34,7 @@ def main() -> None:
     ap.add_argument("--synth", action="store_true", help="use the seeded synthetic transcripts")
     args = ap.parse_args()
 
-    spark = SparkSession.builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark = get_spark(shuffle_partitions=int(os.environ.get("SHUFFLE_PARTITIONS") or 0))
 
     if args.synth or not args.transcripts:
         transcripts = transcripts_df(spark)

@@ -1,7 +1,13 @@
 #!/usr/bin/env bash
 # Cluster launch: package the engine and run the KG pipeline via
-# spark-submit --py-files on a real cluster (the north rule's launch mode).
-# Locally this degrades to local[N] (SPARK_GRAFT_ON_CLUSTER unset).
+# spark-submit --py-files (the north rule's launch mode). The session
+# conf comes from bionext_spark.session.get_spark inside
+# scripts/run_pipeline.py, so it is not repeated here.
+#   - A cluster launch sets SPARK_GRAFT_ON_CLUSTER=1, so get_spark leaves
+#     the master to spark-submit (MASTER, or spark.master in
+#     spark-defaults.conf).
+#   - Without it, the run is local[SPARK_GRAFT_CPUS].
+#   - SHUFFLE_PARTITIONS overrides get_spark's shuffle partition count.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -11,9 +17,4 @@ zip -qr /tmp/bionext_spark.zip bionext_spark
 exec spark-submit \
   --driver-memory "${DRIVER_MEM:-8g}" \
   --py-files /tmp/bionext_spark.zip \
-  --conf spark.sql.shuffle.partitions="${SHUFFLE_PARTITIONS:-32}" \
-  --conf spark.sql.adaptive.enabled=true \
-  --conf spark.sql.adaptive.skewJoin.enabled=true \
-  --conf spark.sql.execution.arrow.pyspark.enabled=true \
-  --conf spark.sql.session.timeZone=UTC \
   scripts/run_pipeline.py "$@"

@@ -213,7 +213,7 @@ def test_no_entities_commits_empty_stages(spark, tmp_path):
         for r in synth.generate_transcripts(n_conversations=4, skew_conversation_turns=5)
     ]
     transcripts = transcripts_df(spark, rows)
-    fixtures.linker_side_data(spark)  # session-memoized, cached on first use
+    fixtures.linker_side_data(spark)  # session-memoized; derived in the driver, caches nothing
     persistent = spark.sparkContext._jsc.getPersistentRDDs().size()
     result = P.run(spark, transcripts, str(tmp_path))
     # run_linker's caches are released once links is committed
