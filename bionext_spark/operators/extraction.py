@@ -1,10 +1,9 @@
 """Stage 3b — relation classification + aggregation → triples
-(SURVEY.md W3, K3, P3, J7, A2, F13).
+(SURVEY.md W6, W3, K3, P3, J7, A2, F13).
 
-  pairs --mapInPandas--> chunk predictions   (W3 chunking + K3 kernel;
-                                              Arrow batch = model batch,
-                                              reference batch_size=128 at
-                                              main.py:67-69)
+  pair spans ⋈cogroup conversations --applyInPandas--> chunk predictions
+      (W6 marker insertion + W3 chunking + K3 kernel in one pass; each
+       doc ships to Python once per bucket, not once per pair)
   predictions --relational--> triples:
     P3  filter per-chunk argmax != Negative_Class (extractor/__init__.py:80)
     J7  comma-composite explode × explode (extractor/__init__.py:88-94)
@@ -19,7 +18,6 @@
 from __future__ import annotations
 
 from functools import lru_cache
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -27,7 +25,6 @@ from pyspark.sql import functions as F
 
 from bionext_spark import kernels as K
 from bionext_spark.adapters import RelationAdapter, StubRelationClassifier
-from bionext_spark.operators import kernel_repartition
 from bionext_spark.config import (
     DEFAULT_CONFIG,
     NEGATIVE_CLASS,
@@ -39,48 +36,6 @@ _PRED_SCHEMA = (
     "conv_id string, e1_id string, e2_id string, "
     "rel_softmax array<double>, novel_raw array<double>, pred_class int"
 )
-
-
-def classify_pairs(
-    pairs: DataFrame,
-    classifier: RelationAdapter | None = None,
-    cfg: PipelineConfig = DEFAULT_CONFIG,
-) -> DataFrame:
-    """W3 + K3 — chunk each marked pair text (last chunk right-aligned,
-    marker-less chunks skipped, extractor/data.py:342-396) and classify
-    every chunk. One output row per chunk prediction."""
-    classifier = classifier or StubRelationClassifier()
-    max_len = cfg.max_seq_len
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in (
-                "conv_id", "e1_id", "e2_id", "rel_softmax", "novel_raw", "pred_class")}
-            e1s, e2s, t1s, t2s, chunks, idx = [], [], [], [], [], []
-            for i, (e1, e2, t1, t2, marked) in enumerate(
-                zip(pdf["e1_id"], pdf["e2_id"], pdf["e1_type"], pdf["e2_type"], pdf["marked_text"])
-            ):
-                for ch in K.chunk_marked_text(marked, max_len, e1 != e2):
-                    e1s.append(e1)
-                    e2s.append(e2)
-                    t1s.append(t1)
-                    t2s.append(t2)
-                    chunks.append(ch)
-                    idx.append(i)
-            if e1s:
-                logits = classifier.classify_batch(e1s, e2s, chunks, t1s, t2s)
-                for i, (rel, nov) in zip(idx, logits):
-                    out["conv_id"].append(pdf["conv_id"].iloc[i])
-                    out["e1_id"].append(pdf["e1_id"].iloc[i])
-                    out["e2_id"].append(pdf["e2_id"].iloc[i])
-                    out["rel_softmax"].append(K.softmax(rel))
-                    out["novel_raw"].append(list(nov))
-                    out["pred_class"].append(K.argmax_first(rel))
-            yield pd.DataFrame(out, columns=list(out.keys()))
-
-    # spread the classification kernel over all cores (see
-    # operators.kernel_repartition on AQE coalescing vs CPU-bound kernels)
-    return kernel_repartition(pairs).mapInPandas(gen, _PRED_SCHEMA)
 
 
 def estimate_pair_weights(
@@ -124,8 +79,9 @@ def classify_pair_spans(
     one cogrouped kernel. Each conversation's doc text ships to Python
     exactly ONCE (cogroup on conv_id) instead of once per pair — on
     entity-rich conversations the per-pair marked_text materialization is
-    ~|pairs| × |doc| bytes and dominated the stage otherwise. Output and
-    semantics are identical to classify_pairs(mark_pairs(...)) (tested).
+    ~|pairs| × |doc| bytes and dominated the stage otherwise. Triples
+    through ``aggregate_triples`` equal ``oracle.run_pipeline``'s, which
+    marks each pair's text with ``kernels.insert_markers`` (tested).
 
     ``pair_weights`` (optional, from estimate_pair_weights): when given,
     the heaviest (conv_id, salt) units are assigned to buckets explicitly
@@ -416,10 +372,3 @@ def aggregate_triples(predictions: DataFrame) -> DataFrame:
         .sortWithinPartitions("conv_id", "subj", "obj")
     )
 
-
-def run_extractor(
-    pairs: DataFrame,
-    classifier: RelationAdapter | None = None,
-    cfg: PipelineConfig = DEFAULT_CONFIG,
-) -> DataFrame:
-    return aggregate_triples(classify_pairs(pairs, classifier, cfg))

@@ -7,8 +7,8 @@ Re-expresses the reference's seven sequential linker passes
   (the lexicons are side data, MBs — never shuffled).
 * O3 cascade ("first non-empty lookup wins", chemicals.py:96-111) →
   union of per-hop candidate sets tagged with a priority, keep each
-  mention's minimum-priority hop (a window min, no extra shuffle since the
-  vote groups by the same key).
+  mention's minimum-priority hop (inside the vote kernel, which groups by
+  the same key).
 * O4 distinct-encode-join (replaces the reference's lru_cache,
   chemicals.py:71): only *distinct unmatched lowercased texts* ever reach
   the encoder kernel; results join back. This is the main throughput lever
@@ -19,9 +19,10 @@ Re-expresses the reference's seven sequential linker passes
 * J4 nearest-anchor → per-conversation equi-join genes×linked-organisms +
   ``min_by`` on (|Δstart|, org_start) (genes.py:107-130; strict ``<``
   keeps the earliest organism on ties), default '9606'.
-* A1 majority vote → count support per (conv, candidate), pick per
-  mention ``max_by(candidate, (count, -rank))`` — Python ``max`` first-of-
-  max tie-break reproduced via lexicon rank order.
+* A1 majority vote → one grouped kernel per conversation bucket
+  (``majority_vote_grouped``): count support per (conv, candidate), pick
+  per mention the max (count, -rank) — Python ``max`` first-of-max
+  tie-break reproduced via lexicon rank order.
 * P2 cleaner → filter '-' + row_number re-numbering (cleaner.py:5-30).
 """
 
@@ -57,22 +58,16 @@ def _cands(df: DataFrame, cand, rank, priority: int) -> DataFrame:
     )
 
 
-def _first_nonempty_hop(cands: DataFrame) -> DataFrame:
-    """O3 — keep each mention's lowest-priority (cheapest) non-empty hop."""
-    w = F.min("priority").over(Window.partitionBy("conv_id", "mention_id"))
-    return cands.withColumn("min_p", w).filter(F.col("priority") == F.col("min_p")).drop("min_p")
-
-
 def vote_conversation(
     rows: list[tuple[int, str | None, str, int, int]],
     corrections: dict[str, str] | None = None,
 ) -> list[tuple[int, str, int]]:
     """Pure hop-select + majority-vote for ONE conversation's candidate
     rows (mention_id, label, cand, rank, priority) → per-mention
-    (mention_id, linked_id, priority). Shared semantics with the
-    relational majority_vote (reference chemicals.py:96-135):
-    min-priority hop per mention, per-(label, cand) support counts, max
-    count with first-in-list (rank) tie-break."""
+    (mention_id, linked_id, priority), with the reference's semantics
+    (chemicals.py:96-135): O3 min-priority hop per mention, A1
+    per-(label, cand) support counts, max count with first-in-list (rank)
+    tie-break (modelled by ``oracle._majority_vote``)."""
     from collections import defaultdict
 
     min_p: dict[int, int] = {}
@@ -101,10 +96,13 @@ def majority_vote_grouped(
     corrections: dict[str, str] | None = None,
     per_label: bool = False,
 ) -> DataFrame:
-    """Grouped-kernel form of hop-select + majority_vote: ONE shuffle and
-    a per-conversation pandas pass, instead of the window + counts + join
-    + groupBy chain (~4 shuffles). Outputs are proven equal to the
-    relational form in tests.
+    """O3 hop-select + A1 majority vote as a grouped kernel: ONE shuffle
+    and a per-conversation ``vote_conversation`` pass, instead of a window
+    + counts + join + groupBy chain (~4 shuffles).
+
+    ``per_label=True`` votes several entity types in one pass (counts
+    keyed by (conv, label, cand)), equivalent to the reference's separate
+    per-pass votes since every mention has exactly one label.
 
     The kernel groups on a conv_id HASH BUCKET, not conv_id itself: per-
     conversation candidate lists are tiny, so per-group Arrow round-trip
@@ -153,31 +151,6 @@ def majority_vote_grouped(
     return bucketed.groupBy("_b").applyInPandas(
         per_bucket, "conv_id string, mention_id int, linked_id string, priority int"
     )
-
-
-def majority_vote(
-    cands: DataFrame,
-    corrections: dict[str, str] | None = None,
-    per_label: bool = False,
-) -> DataFrame:
-    """A1 — per-conversation support counts over candidate lists, each
-    mention takes its max-count candidate, ties → first in list (rank).
-
-    ``per_label=True`` votes several entity types in one pass (counts
-    keyed by (conv, label, cand)), equivalent to the reference's separate
-    per-pass votes since every mention has exactly one label — this halves
-    the engine's shuffle count vs six sequential vote pipelines."""
-    keys = ["conv_id", "label", "cand"] if per_label else ["conv_id", "cand"]
-    counts = cands.groupBy(*keys).agg(F.count("*").alias("cnt"))
-    scored = cands.join(counts, keys)
-    win = scored.groupBy("conv_id", "mention_id").agg(
-        F.max_by("cand", F.struct(F.col("cnt"), (-F.col("rank")).alias("nr"))).alias("linked_id"),
-        F.min("priority").alias("priority"),
-    )
-    if corrections:
-        mapping = F.create_map(*[F.lit(x) for kv in corrections.items() for x in kv])
-        win = win.withColumn("linked_id", F.coalesce(mapping[F.col("linked_id")], F.col("linked_id")))
-    return win
 
 
 # ---------------------------------------------------------------------------
@@ -589,7 +562,7 @@ def _gene_lexicon(train: DataFrame, genes_kb: DataFrame) -> DataFrame:
 
 
 def _nearest_org_anchor(
-    m_gene: DataFrame, linked_orgs: DataFrame, known_taxa
+    m_gene: DataFrame, linked_orgs: DataFrame, known_taxa: list[str]
 ) -> DataFrame:
     """J4 — nearest linked organism whose taxon exists in the gene KB
     (strict < keeps the earliest organism on distance ties,
@@ -606,14 +579,9 @@ def _nearest_org_anchor(
     mention-row explosion entirely). Anchor-less conversations survive the
     left join with a NULL array → NULL fold → the default taxon.
 
-    ``known_taxa``: list of taxon ids (LinkerSideData — becomes an InSet
-    predicate, zero extra jobs) or a 1-column DataFrame (huge-lexicon
-    fallback — broadcast semi join)."""
-    if isinstance(known_taxa, DataFrame):
-        kt = known_taxa.toDF("org_tax")
-        anchors = linked_orgs.join(F.broadcast(kt), "org_tax")
-    else:
-        anchors = linked_orgs.filter(F.col("org_tax").isin(list(known_taxa)))
+    ``known_taxa``: list of taxon ids (``LinkerSideData.known_taxa``);
+    it becomes an InSet predicate, zero extra jobs."""
+    anchors = linked_orgs.filter(F.col("org_tax").isin(known_taxa))
     per_conv = anchors.groupBy("conv_id").agg(
         F.collect_list(F.struct("org_start", "org_tax")).alias("_orgs")
     )
@@ -873,31 +841,20 @@ FLAT_EMB_KBS = {
 def run_linker(
     spark: SparkSession,
     mentions: DataFrame,
-    train_direct: DataFrame | None = None,
-    lexicon_concepts: DataFrame | None = None,
-    lexicon_genes: DataFrame | None = None,
-    lexicon_variants: DataFrame | None = None,
+    side: LinkerSideData,
     encoder: EncoderAdapter | None = None,
     cfg: PipelineConfig = DEFAULT_CONFIG,
-    vote_impl: str = "grouped",
     gene_symbols: DataFrame | None = None,
     litvar=None,
     llm=None,
-    side: LinkerSideData | None = None,
     fewshot_examples: DataFrame | None = None,
     caches: list[DataFrame] | None = None,
 ) -> DataFrame:
     """mentions → LINKS (same rows + linked_id/method; '-' = unlinked).
 
-    ``vote_impl``: 'grouped' (default) fuses hop-selection + majority vote
-    into one per-conversation kernel (1 shuffle); 'relational' keeps the
-    pure window+groupBy form. Both produce identical output (tested).
-
-    ``side``: a prebuilt (possibly session-memoized) LinkerSideData; when
-    None it is built here from the four lexicon DataFrames — one
-    materialization per call, so long-running / multi-document jobs should
-    pass a shared instance (the per-run rebuild was a measured serial-
-    latency term in the N→4N scaling bench).
+    ``side``: the lexicon side data, derived once per session
+    (``fixtures.linker_side_data``, ``LinkerSideData.from_rows`` or
+    ``LinkerSideData.build``).
 
     ``gene_symbols`` (J8, reference gene_lookup.json) + ``litvar``/``llm``
     (MemoizedLookup instances over S8/K5 adapters) enable the deep
@@ -909,16 +866,7 @@ def run_linker(
     caller to unpersist once the links output is materialized
     (``pipeline.KGRun.release_caches``); left None, they stay cached."""
     encoder = encoder or StubEncoder(cfg.embedding_dim)
-    if side is None:
-        side = LinkerSideData.build(
-            spark, train_direct, lexicon_concepts, lexicon_genes, lexicon_variants
-        )
     mentions = _cache(mentions, caches)  # fans into dict join, anchors, final join
-
-    def _vote(c: DataFrame, corrections=None, per_label: bool = False) -> DataFrame:
-        if vote_impl == "grouped":
-            return majority_vote_grouped(c, corrections, per_label)
-        return majority_vote(_first_nonempty_hop(c), corrections, per_label)
 
     m = mentions.select(
         "conv_id",
@@ -955,7 +903,7 @@ def run_linker(
     )
 
     # --- taxonomy vote first: gene linking anchors on its winners ---
-    tax = _cache(_vote(
+    tax = _cache(majority_vote_grouped(
         c_dict.filter(F.col("label") == "OrganismTaxon").drop("label"),
         TAXONOMY_ID_CORRECTIONS,
     ), caches)
@@ -1036,20 +984,20 @@ def run_linker(
         .unionByName(c_emb_gene)
     )
     if deep:
-        rest = _cache(_vote(combined, per_label=True), caches)
+        rest = _cache(majority_vote_grouped(combined, per_label=True), caches)
         c_var = _variant_candidates(
             mentions, c_dict, c_rs, rest, gene_symbols, litvar, llm,
             fewshot_examples=fewshot_examples, encoder=encoder,
             fewshot_k=cfg.fewshot_k, fewshot_threshold=cfg.fewshot_threshold,
             caches=caches,
         )
-        var_winners = _vote(c_var, per_label=True)
+        var_winners = majority_vote_grouped(c_var, per_label=True)
         all_winners = tax.unionByName(rest).unionByName(var_winners)
     else:
         combined = combined.unionByName(
             c_dict.filter(F.col("label") == "SequenceVariant")
         ).unionByName(c_rs)
-        all_winners = tax.unionByName(_vote(combined, per_label=True))
+        all_winners = tax.unionByName(majority_vote_grouped(combined, per_label=True))
 
     method_map = F.create_map(
         *[F.lit(x) for (lbl, p), name in _METHODS.items() for x in (f"{lbl}\x00{p}", name)]

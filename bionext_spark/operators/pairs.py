@@ -1,5 +1,5 @@
-"""Stage 3a — candidate pair generation + marker instrumentation
-(SURVEY.md A7, J5, J6, W6).
+"""Stage 3a — candidate pair generation + per-pair entity spans
+(SURVEY.md A7, J5, J6; W6 runs in stage 3b).
 
 * A7 distinct-ids: ``select(conv_id, linked_id, label).distinct()``.
 * J5 self theta-join: pairs are combinations of the per-conversation
@@ -13,18 +13,17 @@
   reference's "first matching comma-part decides entity order" loop
   (extractor/data.py:97-126) becomes min-position arithmetic over the
   exploded part list.
-* W6 reverse-ordered marker insertion happens in one grouped kernel over
-  (pair, collected spans) — the only Python in this stage.
+* W6 marker insertion runs in the classifier kernel
+  (``extraction.classify_pair_spans``), not here: this stage ends at the
+  span lists (``pair_spans``), so the ~|pairs|×|doc| marked text never
+  materializes and the stage runs no Python.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from bionext_spark import kernels as K
 from bionext_spark.config import DEFAULT_CONFIG, VALID_TYPE_PAIRS, PipelineConfig
-from bionext_spark.operators import kernel_repartition
 
 
 def generate_pairs(clean_links: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
@@ -86,74 +85,6 @@ def generate_pairs(clean_links: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG)
     )
 
 
-_MARK_SCHEMA = (
-    "conv_id string, e1_id string, e1_type string, e2_id string, e2_type string, "
-    "marked_text string"
-)
-
-
-def _side_spans(this: str, other: str, op: str) -> F.Column:
-    """Span list for one side of a pair from the raw per-side match lists.
-
-    For mention x (keyed by (start, end)): p_this = min part_pos among
-    ``this``-side matches, p_other likewise (∞ when absent); keep x when
-    p_this <op> p_other — the reference's "first matching comma-part
-    decides entity order" loop (extractor/data.py:110-121) as array HOFs
-    over per-pair lists of at most a few hundred elements. Side 1 uses
-    ``<=`` and side 2 strict ``<`` so a part-position tie assigns the
-    mention to entity 1, exactly the old order=1-wins rule."""
-    inf = 999_999_999
-    min_this = (
-        f"aggregate(filter({this}, y -> y.start = x.start AND y.end = x.end), "
-        f"{inf}, (a, y) -> least(a, y.part_pos))"
-    )
-    min_other = (
-        f"aggregate(filter({other}, y -> y.start = x.start AND y.end = x.end), "
-        f"{inf}, (a, y) -> least(a, y.part_pos))"
-    )
-    return F.expr(
-        f"array_sort(array_distinct(transform(filter({this}, x -> "
-        f"{min_this} {op} {min_other}), x -> struct(x.start, x.end))))"
-    )
-
-
-def _pair_spans_scan(pairs: DataFrame, clean_links: DataFrame) -> DataFrame:
-    """Superseded list-scan form of :func:`pair_spans`, kept as the
-    equality oracle for it (tests/test_pairs.py): one part→mentions map
-    per conversation, each pair rebuilds its two raw span lists from the
-    map and resolves first-match-wins ordering by re-scanning both lists
-    per mention (_side_spans) — O(|raw1|·(|raw1|+|raw2|)) aggregate calls
-    per pair, measured as the dominant JVM cost of the pairs stage (199
-    of 704 core-s at the 4N bench point)."""
-    mention_parts = clean_links.select(
-        "conv_id", "start", "end", F.posexplode(F.split("linked_id", ",")).alias("part_pos", "part")
-    )
-    part_ms = mention_parts.groupBy("conv_id", "part").agg(
-        F.collect_list(F.struct("start", "end", "part_pos")).alias("ms")
-    )
-    conv_maps = part_ms.groupBy("conv_id").agg(
-        F.map_from_entries(F.collect_list(F.struct("part", "ms"))).alias("pm")
-    )
-    pair_cols = ["conv_id", "e1_id", "e1_type", "e2_id", "e2_type"]
-
-    def raw(side_id: str) -> str:
-        # every part of a pair entity id exists in pm (pairs derive from
-        # the same clean_links rows); the null filter is belt-and-braces
-        return (
-            f"flatten(filter(transform(split({side_id}, ','), p -> pm[p]),"
-            " a -> a is not null))"
-        )
-
-    j = pairs.join(conv_maps, "conv_id").select(
-        *pair_cols, F.expr(raw("e1_id")).alias("raw1"), F.expr(raw("e2_id")).alias("raw2")
-    )
-    return j.select(
-        *pair_cols,
-        _side_spans("raw1", "raw2", "<=").alias("spans1"),
-        _side_spans("raw2", "raw1", "<").alias("spans2"),
-    )
-
-
 # span (start, end) packed into one bigint map key: map_zip_with's key
 # union uses a hash index for primitive keys, so per-pair side resolution
 # is O(n1 + n2) instead of a per-element rescan of both lists
@@ -177,11 +108,12 @@ def pair_spans(pairs: DataFrame, clean_links: DataFrame) -> DataFrame:
     ``map_zip_with(em[e1], em[e2])`` pass: side 1 keeps spans where its
     position wins ties (``<=``), side 2 where it strictly wins (``<``) —
     the reference's order=1-wins rule. map_zip_with's key union is
-    hash-indexed for primitive keys, so per-pair cost is O(n1 + n2); the
-    previous list-scan form (_pair_spans_scan, kept as the equality
-    oracle) re-aggregated both raw lists per mention — O(n²) per pair and
-    the single largest JVM term in the N→4N scaling profile (199 of 704
-    core-s at the 4N bench point). Each pair row still shuffles exactly
+    hash-indexed for primitive keys, so per-pair cost is O(n1 + n2); a
+    list-scan form that re-aggregated both raw lists per mention was
+    O(n²) per pair and the single largest JVM term in the N→4N scaling
+    profile (199 of 704 core-s at the 4N bench point). Rendering these
+    span lists with ``kernels.insert_markers`` gives the oracle's
+    ``marked_text`` (tested). Each pair row still shuffles exactly
     once (the conv_id join); mention parts shuffle through the three-level
     pre-aggregation of tiny keyed rows; per-conversation map size is
     bounded by entity × mention fan-out — entities, not pairs — and the
@@ -230,34 +162,3 @@ def pair_spans(pairs: DataFrame, clean_links: DataFrame) -> DataFrame:
         side("v1", "v2", "<=").alias("spans1"),
         side("v2", "v1", "<").alias("spans2"),
     )
-
-
-def mark_pairs(pairs: DataFrame, clean_links: DataFrame, conversations: DataFrame) -> DataFrame:
-    """J6 + W6 → PAIRS with marked_text (explicit materialization; the
-    hot pipeline path fuses marking into the classifier kernel instead —
-    see extraction.classify_pair_spans — so the ~|pairs|×|doc| marked-text
-    blow-up never shuffles)."""
-    spans = pair_spans(pairs, clean_links)
-    with_doc = kernel_repartition(
-        spans.join(conversations.select("conv_id", "doc_text"), "conv_id")
-    )
-
-    def mark(batches):
-        for pdf in batches:
-            marked = [
-                K.insert_markers(
-                    doc,
-                    [(s["start"], s["end"]) for s in (s1 if s1 is not None else [])],
-                    [(s["start"], s["end"]) for s in (s2 if s2 is not None else [])],
-                )
-                for doc, s1, s2 in zip(pdf["doc_text"], pdf["spans1"], pdf["spans2"])
-            ]
-            yield pdf.drop(columns=["doc_text", "spans1", "spans2"]).assign(marked_text=marked)
-
-    return with_doc.mapInPandas(mark, _MARK_SCHEMA)
-
-
-def run_pair_generation(
-    clean_links: DataFrame, conversations: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG
-) -> DataFrame:
-    return mark_pairs(generate_pairs(clean_links, cfg), clean_links, conversations)

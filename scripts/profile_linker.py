@@ -47,10 +47,7 @@ def main() -> None:
         out[name] = round(time.time() - t0, 2)
         return r
 
-    train = fixtures.train_direct_df(spark)
-    concepts = fixtures.lexicon_concepts_df(spark)
-    genes = fixtures.lexicon_genes_df(spark)
-    variants = fixtures.lexicon_variants_df(spark)
+    side = fixtures.linker_side_data(spark)
 
     mc = step("mentions_cache", lambda: mentions.cache())
     m = mentions.select(
@@ -68,8 +65,7 @@ def main() -> None:
         ).alias("k"),
     ).select("conv_id", "mention_id", "label", "start", "k.key_kind", "k.text_key")
 
-    dict_lex = L._dictionary_lexicon(train, concepts, variants)
-    c_dict = step("c_dict", lambda: m.join(F.broadcast(dict_lex), ["label", "key_kind", "text_key"]).select(
+    c_dict = step("c_dict", lambda: m.join(F.broadcast(side.dict_lex), ["label", "key_kind", "text_key"]).select(
         "conv_id", "mention_id", "label", "cand", F.col("rank").cast("long").alias("rank"), "priority"
     ).localCheckpoint())
 
@@ -87,12 +83,11 @@ def main() -> None:
     )
     m_gene = step("gene_anchor", lambda: L._nearest_org_anchor(
         m.filter(F.col("label") == "GeneOrGeneProduct").drop("label", "key_kind"),
-        linked_orgs, genes.select("tax_id").distinct(),
+        linked_orgs, side.known_taxa,
     ).localCheckpoint())
 
-    gene_lex = L._gene_lexicon(train, genes)
     c_gene = step("c_gene", lambda: m_gene.alias("g").join(
-        F.broadcast(gene_lex).alias("l"),
+        F.broadcast(side.gene_lex).alias("l"),
         (F.col("g.text_key") == F.col("l.text_key"))
         & (F.col("l.tax_id").isNull() | (F.col("l.tax_id") == F.col("g.tax_id"))),
     ).select("conv_id", "mention_id", F.lit("GeneOrGeneProduct").alias("label"),

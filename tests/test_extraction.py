@@ -9,9 +9,9 @@ from bionext_spark import kernels as K
 from bionext_spark import oracle, synth
 from bionext_spark.adapters import StubEncoder, StubLexiconTagger
 from bionext_spark.operators.assemble import assemble_conversations
-from bionext_spark.operators.extraction import run_extractor
+from bionext_spark.operators.extraction import aggregate_triples, classify_pair_spans
 from bionext_spark.operators.linking import run_cleaner, run_linker
-from bionext_spark.operators.pairs import run_pair_generation
+from bionext_spark.operators.pairs import generate_pairs, pair_spans
 from bionext_spark.operators.tagging import run_tagger
 from bionext_spark.sources import fixtures
 
@@ -34,24 +34,28 @@ def spark_stages(spark, transcripts):
     convs = assemble_conversations(transcripts)
     mentions = run_tagger(convs, StubLexiconTagger(synth.tag_lexicon_entries()))
     links = run_linker(
-        spark,
-        mentions,
-        fixtures.train_direct_df(spark),
-        fixtures.lexicon_concepts_df(spark),
-        fixtures.lexicon_genes_df(spark),
-        fixtures.lexicon_variants_df(spark),
-        StubEncoder(),
+        spark, mentions, side=fixtures.linker_side_data(spark), encoder=StubEncoder()
     )
     cleaned = run_cleaner(links).cache()
-    pairs = run_pair_generation(cleaned, convs).cache()
-    return convs, cleaned, pairs
+    spans = pair_spans(generate_pairs(cleaned), cleaned).cache()
+    return convs, cleaned, spans
 
 
 def test_pairs_match_oracle(spark_stages, oracle_out):
-    _, _, pairs = spark_stages
+    """pair_spans rendered with kernels.insert_markers gives the oracle's
+    marked_text for every pair, including composite-id entities and the
+    <= / < rule that gives a mention tied on part position to entity 1."""
+    convs, cleaned, spans = spark_stages
+    docs = dict(convs.select("conv_id", "doc_text").collect())
+
+    def sp(lst):
+        return [(s["start"], s["end"]) for s in lst or []]
+
+    rows = spans.collect()
     got = sorted(
-        (r["conv_id"], r["e1_id"], r["e1_type"], r["e2_id"], r["e2_type"], r["marked_text"])
-        for r in pairs.collect()
+        (r["conv_id"], r["e1_id"], r["e1_type"], r["e2_id"], r["e2_type"],
+         K.insert_markers(docs[r["conv_id"]], sp(r["spans1"]), sp(r["spans2"])))
+        for r in rows
     )
     exp = sorted(
         (p["conv_id"], p["e1_id"], p["e1_type"], p["e2_id"], p["e2_type"], p["marked_text"])
@@ -60,30 +64,31 @@ def test_pairs_match_oracle(spark_stages, oracle_out):
     assert len(exp) > 20
     assert got == exp
 
+    ids: dict[tuple, list[list[str]]] = {}
+    for r in cleaned.select("conv_id", "start", "end", "linked_id").collect():
+        ids.setdefault((r[0], r[1], r[2]), []).append(r[3].split(","))
+
+    def pos(conv, span, ent):
+        # first part of the mention's id that the entity shares
+        parts = ent.split(",")
+        return min(
+            (i for lid in ids[(conv, *span)] for i, p in enumerate(lid) if p in parts),
+            default=None,
+        )
+
+    # at least one side-1 tie: the rule is actually exercised
+    assert any(
+        pos(r["conv_id"], s, r["e1_id"]) == pos(r["conv_id"], s, r["e2_id"])
+        for r in rows
+        for s in sp(r["spans1"])
+    )
+
 
 def test_triples_match_oracle(spark_stages, oracle_out):
-    _, _, pairs = spark_stages
-    got = sorted(
-        (r["conv_id"], r["subj"], r["pred"], r["obj"], r["novel"])
-        for r in run_extractor(pairs).collect()
-    )
-    exp = sorted(
-        (t["conv_id"], t["subj"], t["pred"], t["obj"], t["novel"])
-        for t in oracle_out["triples"]
-    )
-    assert len(exp) > 10
-    # composite ids actually exploded somewhere (J7)
-    assert got == exp
-
-
-def test_fused_classify_equals_marked_path(spark_stages, oracle_out):
-    """classify_pair_spans (cogrouped, doc shipped once per conversation)
-    must equal classify_pairs(mark_pairs(...)) exactly."""
-    from bionext_spark.operators.extraction import aggregate_triples, classify_pair_spans
-    from bionext_spark.operators.pairs import generate_pairs, pair_spans
-
-    convs, cleaned, _ = spark_stages
-    spans = pair_spans(generate_pairs(cleaned), cleaned)
+    """The fused classifier (markers, chunking and classes in one
+    cogrouped kernel, each doc shipped once per bucket) then
+    aggregate_triples gives the oracle's triples."""
+    convs, _, spans = spark_stages
     got = sorted(
         (r["conv_id"], r["subj"], r["pred"], r["obj"], r["novel"])
         for r in aggregate_triples(classify_pair_spans(spans, convs)).collect()
@@ -92,34 +97,89 @@ def test_fused_classify_equals_marked_path(spark_stages, oracle_out):
         (t["conv_id"], t["subj"], t["pred"], t["obj"], t["novel"])
         for t in oracle_out["triples"]
     )
+    assert len(exp) > 10
     assert got == exp
 
 
-def test_pair_spans_zip_equals_scan_oracle(spark_stages):
-    """The hash-indexed map_zip_with form of pair_spans must equal the
-    superseded per-mention list-scan form row-for-row (same pairs, same
-    ordered span lists on both sides), including composite-id entities
-    and the <= / < tie rule."""
-    from bionext_spark.operators.pairs import _pair_spans_scan, generate_pairs, pair_spans
+def test_fused_classify_equals_marked_path(spark_stages):
+    """classify_pair_spans (token-space marker splicing, cogrouped, doc
+    shipped once per bucket) must give exactly the chunk predictions of the
+    plain marked-text path: insert_markers, chunk_marked_text, classify."""
+    from bionext_spark.adapters import StubRelationClassifier
+    from bionext_spark.config import DEFAULT_CONFIG
 
-    convs, cleaned, _ = spark_stages
-    pairs = generate_pairs(cleaned)
+    convs, _, spans = spark_stages
+    docs = dict(convs.select("conv_id", "doc_text").collect())
+    clf = StubRelationClassifier()
 
-    def rows(df):
-        return sorted(
-            (r["conv_id"], r["e1_id"], r["e1_type"], r["e2_id"], r["e2_type"],
-             tuple((s["start"], s["end"]) for s in r["spans1"]),
-             tuple((s["start"], s["end"]) for s in r["spans2"]))
-            for r in df.collect()
+    def sp(lst):
+        return [(s["start"], s["end"]) for s in lst or []]
+
+    exp = []
+    for r in spans.collect():
+        marked = K.insert_markers(docs[r["conv_id"]], sp(r["spans1"]), sp(r["spans2"]))
+        chunks = K.chunk_marked_text(
+            marked, DEFAULT_CONFIG.max_seq_len, r["e1_id"] != r["e2_id"]
         )
+        n = len(chunks)
+        for rel, nov in clf.classify_batch(
+            [r["e1_id"]] * n, [r["e2_id"]] * n, chunks,
+            [r["e1_type"]] * n, [r["e2_type"]] * n,
+        ):
+            exp.append((r["conv_id"], r["e1_id"], r["e2_id"],
+                        tuple(K.softmax(rel)), tuple(nov), K.argmax_first(rel)))
+    got = [
+        (r["conv_id"], r["e1_id"], r["e2_id"],
+         tuple(r["rel_softmax"]), tuple(r["novel_raw"]), r["pred_class"])
+        for r in classify_pair_spans(spans, convs).collect()
+    ]
+    assert len(exp) > 20
+    assert sorted(got) == sorted(exp)
 
-    new = rows(pair_spans(pairs, cleaned))
-    old = rows(_pair_spans_scan(pairs, cleaned))
-    assert len(new) > 20
-    assert new == old
-    # at least one pair resolves a tie (side-1 wins) and one span list is
-    # non-empty on both sides — the rule is actually exercised
-    assert any(s1 and s2 for *_, s1, s2 in new)
+
+def test_pair_spans_zip_equals_scan_oracle(spark_stages):
+    """The hash-indexed map_zip_with form of pair_spans must equal a plain
+    per-mention list scan row-for-row (same pairs, same ordered span lists
+    on both sides), including composite-id entities and the <= / < tie
+    rule: a mention goes to side 1 when its first shared id part is at a
+    position <= side 2's, to side 2 when strictly <."""
+    _, cleaned, spans = spark_stages
+    inf = 999_999_999
+    # conv → part → [(start, end, part_pos)], the list-scan form's map
+    pm: dict[str, dict[str, list[tuple[int, int, int]]]] = {}
+    for r in cleaned.select("conv_id", "start", "end", "linked_id").collect():
+        for i, p in enumerate(r["linked_id"].split(",")):
+            pm.setdefault(r["conv_id"], {}).setdefault(p, []).append(
+                (r["start"], r["end"], i)
+            )
+
+    def side(this, other, le):
+        def best(lst, x):
+            return min((y[2] for y in lst if y[:2] == x[:2]), default=inf)
+
+        keep = {
+            x[:2] for x in this
+            if (best(this, x) <= best(other, x) if le else best(this, x) < best(other, x))
+        }
+        return tuple(sorted(keep))
+
+    def raw(conv, ent):
+        return [m for p in ent.split(",") for m in pm[conv].get(p, [])]
+
+    got, exp = [], []
+    for r in spans.collect():
+        key = (r["conv_id"], r["e1_id"], r["e1_type"], r["e2_id"], r["e2_type"])
+        got.append((*key,
+                    tuple((s["start"], s["end"]) for s in r["spans1"] or []),
+                    tuple((s["start"], s["end"]) for s in r["spans2"] or [])))
+        raw1, raw2 = raw(r["conv_id"], r["e1_id"]), raw(r["conv_id"], r["e2_id"])
+        exp.append((*key, side(raw1, raw2, True), side(raw2, raw1, False)))
+    assert len(got) > 20
+    assert sorted(got) == sorted(exp)
+    # at least one pair has non-empty span lists on both sides, and at
+    # least one mention matched by both entities is resolved to side 1
+    assert any(s1 and s2 for *_, s1, s2 in got)
+    assert any(set(s1) & {x[:2] for x in raw(c, e2)} for c, _, _, e2, _, s1, _ in got)
 
 
 def test_marker_insertion_kernel():
@@ -142,11 +202,8 @@ def test_classify_salting_invariance(spark_stages):
     import dataclasses
 
     from bionext_spark.config import DEFAULT_CONFIG
-    from bionext_spark.operators.extraction import classify_pair_spans
-    from bionext_spark.operators.pairs import generate_pairs, pair_spans
 
-    convs, cleaned, _ = spark_stages
-    spans = pair_spans(generate_pairs(cleaned), cleaned)
+    convs, _, spans = spark_stages
 
     def rows(cfg):
         return sorted(
@@ -172,14 +229,9 @@ def test_classify_weighted_bucketing_invariance(spark_stages):
     import dataclasses
 
     from bionext_spark.config import DEFAULT_CONFIG
-    from bionext_spark.operators.extraction import (
-        classify_pair_spans,
-        estimate_pair_weights,
-    )
-    from bionext_spark.operators.pairs import generate_pairs, pair_spans
+    from bionext_spark.operators.extraction import estimate_pair_weights
 
-    convs, cleaned, _ = spark_stages
-    spans = pair_spans(generate_pairs(cleaned), cleaned)
+    convs, cleaned, spans = spark_stages
 
     def rows(cfg, weighted):
         w = estimate_pair_weights(cleaned, convs, cfg) if weighted else None
@@ -278,7 +330,6 @@ def test_aggregate_triples_tie_semantics(spark):
     Also pins the two Negative_Class exits: pred_class==8 rows drop before
     aggregation, and groups whose summed argmax is 8 drop after."""
     from bionext_spark.config import NEGATIVE_CLASS, RELATION_LABELS
-    from bionext_spark.operators.extraction import aggregate_triples
 
     n_rel = len(RELATION_LABELS)
 

@@ -156,11 +156,8 @@ def test_llm_hop_receives_engine_selected_examples(spark, tmp_path):
     links = run_linker(
         spark,
         mentions,
-        fixtures.train_direct_df(spark),
-        fixtures.lexicon_concepts_df(spark),
-        fixtures.lexicon_genes_df(spark),
-        fixtures.lexicon_variants_df(spark),
-        StubEncoder(),
+        side=fixtures.linker_side_data(spark),
+        encoder=StubEncoder(),
         gene_symbols=fixtures.gene_symbols_df(spark),
         llm=MemoizedLookup(spark, str(tmp_path / "m"), Recorder()),
         fewshot_examples=fixtures.variant_examples_df(spark),

@@ -37,16 +37,9 @@ def mentions(transcripts):
 
 @pytest.fixture(scope="module")
 def spark_links(spark, mentions):
-    links = run_linker(
-        spark,
-        mentions,
-        fixtures.train_direct_df(spark),
-        fixtures.lexicon_concepts_df(spark),
-        fixtures.lexicon_genes_df(spark),
-        fixtures.lexicon_variants_df(spark),
-        StubEncoder(),
+    return run_linker(
+        spark, mentions, side=fixtures.linker_side_data(spark), encoder=StubEncoder()
     )
-    return links
 
 
 LINK_KEY = ("conv_id", "mention_id", "label", "start", "end", "text", "turn_idx", "linked_id", "method")
@@ -63,24 +56,6 @@ def test_linker_matches_oracle(spark_links, oracle_out):
     # The oracle must exercise every cascade hop for the test to mean much.
     methods = {r["method"] for r in oracle_out["links"] if r["method"]}
     assert {"train", "kb", "embedding", "rsid"} <= methods
-    assert got == exp
-
-
-def test_relational_vote_equals_grouped(spark, mentions, spark_links):
-    """The single-shuffle grouped vote and the pure-relational vote must
-    produce identical links."""
-    rel = run_linker(
-        spark,
-        mentions,
-        fixtures.train_direct_df(spark),
-        fixtures.lexicon_concepts_df(spark),
-        fixtures.lexicon_genes_df(spark),
-        fixtures.lexicon_variants_df(spark),
-        StubEncoder(),
-        vote_impl="relational",
-    )
-    got = _norm(r.asDict() for r in rel.collect())
-    exp = _norm(r.asDict() for r in spark_links.collect())
     assert got == exp
 
 

@@ -40,9 +40,7 @@ def test_parity_precision_recall_one(spark, transcripts, oracle_out):
     mentions = run_tagger(convs, StubLexiconTagger(S.tag_lexicon_entries()))
     links = run_linker(
         spark, mentions,
-        fixtures.train_direct_df(spark), fixtures.lexicon_concepts_df(spark),
-        fixtures.lexicon_genes_df(spark), fixtures.lexicon_variants_df(spark),
-        StubEncoder(),
+        side=fixtures.linker_side_data(spark), encoder=StubEncoder(),
     )
     cleaned = run_cleaner(links).cache()
     triples = aggregate_triples(
@@ -98,9 +96,7 @@ def test_spark_cap_matches_oracle(spark, transcripts, transcripts_rows):
     mentions = run_tagger(convs, StubLexiconTagger(S.tag_lexicon_entries()), cfg)
     links = run_linker(
         spark, mentions,
-        fixtures.train_direct_df(spark), fixtures.lexicon_concepts_df(spark),
-        fixtures.lexicon_genes_df(spark), fixtures.lexicon_variants_df(spark),
-        StubEncoder(), cfg,
+        side=fixtures.linker_side_data(spark), encoder=StubEncoder(), cfg=cfg,
     )
     cleaned = run_cleaner(links)
     got = sorted(

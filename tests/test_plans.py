@@ -51,11 +51,8 @@ def test_linker_dictionary_join_is_broadcast(spark, transcripts):
     links = run_linker(
         spark,
         mentions,
-        fixtures.train_direct_df(spark),
-        fixtures.lexicon_concepts_df(spark),
-        fixtures.lexicon_genes_df(spark),
-        fixtures.lexicon_variants_df(spark),
-        StubEncoder(),
+        side=fixtures.linker_side_data(spark),
+        encoder=StubEncoder(),
     )
     assert uses_broadcast_join(links)
 
@@ -114,3 +111,24 @@ def test_pair_generation_single_shuffle_and_bounded(spark):
         for j in range(i + 1, len(ents))
     ][:100]
     assert rows == set(expected)
+
+
+def test_t_spread_repartitions_only_narrow_scans(spark, tmp_path):
+    """entry_queries.t_spread adds exactly one hash exchange on the key
+    over a single-file table, and none over a table with at least
+    defaultParallelism files (the no-op path at real scale)."""
+    from pyspark.sql import functions as F
+
+    from bionext_spark.entry_queries import t_spread
+    from bionext_spark.plans import physical_plan
+
+    n = spark.sparkContext.defaultParallelism
+    df = spark.range(1000).select(F.col("id").alias("k"), (F.col("id") * 2).alias("v"))
+    df.coalesce(1).write.parquet(str(tmp_path / "one.parquet"))
+    df.repartition(n).write.parquet(str(tmp_path / "many.parquet"))
+
+    one = physical_plan(t_spread(spark, str(tmp_path), "one", "k"))
+    assert one.count("Exchange") == 1, one
+    assert one.count("hashpartitioning(k#") == 1, one
+    many = physical_plan(t_spread(spark, str(tmp_path), "many", "k"))
+    assert "Exchange" not in many, many

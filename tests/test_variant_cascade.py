@@ -44,11 +44,8 @@ def _engine_links(spark, transcripts, tmp_path, litvar_adapter, llm_adapter):
     return run_linker(
         spark,
         mentions,
-        fixtures.train_direct_df(spark),
-        fixtures.lexicon_concepts_df(spark),
-        fixtures.lexicon_genes_df(spark),
-        fixtures.lexicon_variants_df(spark),
-        StubEncoder(),
+        side=fixtures.linker_side_data(spark),
+        encoder=StubEncoder(),
         gene_symbols=fixtures.gene_symbols_df(spark),
         litvar=MemoizedLookup(spark, str(tmp_path / "litvar_memo"), litvar_adapter),
         llm=MemoizedLookup(spark, str(tmp_path / "llm_memo"), llm_adapter),
